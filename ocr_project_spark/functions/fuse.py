@@ -18,6 +18,14 @@ Semantics (constants in rules.py, matching the reference exactly):
   fused conf = |consensus| > 1 and >= 2 valid:
                  min(1, avg(consensus conf) + min(0.05, 0.01*n))  (:281-287)
                else winner conf
+
+Who reads what: the consensus and fused-confidence math serve only the
+callers that read ``confidence``/``method``/``n_consensus`` —
+``fuse_media_candidates`` itself, ``fuse_with_retry`` (its route reads
+the fused confidence) and the harness queries.  Extraction reads only
+the winner's text, so ``operators/extract.py`` builds its per-document
+map from ``min_by(..., fusion_order_key())`` per span and runs none of
+the window, Jaccard or consensus work.
 """
 
 from __future__ import annotations
@@ -196,6 +204,35 @@ def valid_expr(text: Column, conf: Column) -> Column:
     )
 
 
+def fusion_order_key() -> Column:
+    """The fusion window's total order over candidate rows as one
+    ascending-comparable struct, so ``min_by(x, fusion_order_key())``
+    picks exactly the window's row_number() == 1 row.  Field by field
+    against the window's ORDER BY:
+
+      k_invalid   valid rows first
+      k_null      confidence DESC NULLS LAST: a null confidence ranks
+                  below every number
+      k_not_nan   Spark orders NaN above every double, so DESC puts it
+                  first; negation cannot express that (-NaN is NaN)
+      k_nconf     confidence desc as an ascending key (0.0 == -0.0)
+      k_priority  engine priority asc
+      k_engine    engine asc; struct comparison puts a null engine
+                  first, as the window's ASC NULLS FIRST does
+      k_text      coalesce(text, '') asc
+    """
+    conf = F.col("confidence")
+    return F.struct(
+        F.when(valid_expr(F.col("text"), conf), 0).otherwise(1).alias("k_invalid"),
+        conf.isNull().alias("k_null"),
+        (~F.isnan(conf)).alias("k_not_nan"),
+        (-conf).alias("k_nconf"),
+        priority_expr(F.col("engine")).alias("k_priority"),
+        F.col("engine").alias("k_engine"),
+        F.coalesce(F.col("text"), F.lit("")).alias("k_text"),
+    )
+
+
 def fuse_media_candidates(
     cands: DataFrame, early_termination: float | None = None
 ) -> DataFrame:
@@ -313,9 +350,9 @@ def fuse_media_candidates_routed(
 ) -> DataFrame:
     """Early-termination as an explicit filter-split -> union plan.
 
-    Stage 1 (cheap): ONE hash aggregate per span — min_by under the
-    total fusion order picks the winner, max(valid conf) computes the
-    route.  No window sort, no Jaccard.
+    Stage 1 (cheap): ONE aggregate per span — min_by under the total
+    fusion order (fusion_order_key) picks the winner, max(valid conf)
+    computes the route.  No window sort, no Jaccard.
     Stage 2: spans whose best valid candidate clears the threshold emit
     directly from the aggregate (method 'early_termination'); the rest
     are semi-joined back and run the full consensus machinery.
@@ -334,19 +371,10 @@ def fuse_media_candidates_routed(
     hash the same (doc_id, offset) key, so the split adds no new skew.
     """
     valid = valid_expr(F.col("text"), F.col("confidence"))
-    # ascending-comparable total order (numeric fields negated for
-    # desc): min_by == the window's rn=1 row
-    ord_key = F.struct(
-        F.when(valid, 0).otherwise(1).alias("k_invalid"),
-        (-F.col("confidence")).alias("k_nconf"),
-        priority_expr(F.col("engine")).alias("k_priority"),
-        F.col("engine").alias("k_engine"),
-        F.coalesce(F.col("text"), F.lit("")).alias("k_text"),
-    )
     agg = cands.groupBy("doc_id", "offset").agg(
         F.min_by(
             F.struct(F.col("text").alias("t"), F.col("confidence").alias("c")),
-            ord_key,
+            fusion_order_key(),
         ).alias("win"),
         F.max(F.when(valid, F.col("confidence"))).alias("mvc"),
     )

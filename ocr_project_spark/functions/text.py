@@ -52,17 +52,6 @@ def chunk_tokens(toks: Column, k: int = 10) -> Column:
     )
 
 
-def chunk_spans(text: Column, k: int = 10) -> Column:
-    """Derive a span array from flat text: consecutive k-token chunks.
-
-    FIXTURES.md section 5: the driver's ``documents`` table has flat
-    text; this deterministic chunking gives harness queries the same
-    span shape as the native corpus.  Convenience form — prefer
-    projecting ``tokens(text)`` and calling ``chunk_tokens`` on the
-    column (see that docstring for the cost note)."""
-    return chunk_tokens(tokens(text), k)
-
-
 def quality_score(text: Column, link_token: str = "a") -> Column:
     """Weighted document quality score — the C11 analog
     (quality_analyzer.py:261-281 weights 0.30/0.25/0.25/0.20).

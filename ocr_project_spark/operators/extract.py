@@ -6,9 +6,12 @@ The reference runs this per document in a Python call chain
 the DataFrame and each stage is a columnar transformation:
 
   1. validity filter (F1, base_engine.py:86-112)
-  2. media-candidate fusion (functions/fuse.py) — one shuffle on
-     (doc_id, offset)
-  3. fused winners collapsed to one map per doc — shuffle on doc_id
+  2. media-candidate winners: one aggregate per (doc_id, offset),
+     min_by under the fusion order (functions/fuse.fusion_order_key).
+     Assembly reads only the winning text, so no window sort, Jaccard
+     or consensus math runs here; retry fusion (retry_candidates=)
+     still runs the full functions/fuse.fuse_with_retry
+  3. winners collapsed to one map per doc — shuffle on doc_id
   4. LEFT join docs->fused map on doc_id (docs never exploded; span
      arrays stay nested, so mega-doc skew stays inside one row and the
      join key is the single hash(doc_id))
@@ -30,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_project_spark.functions.classify import is_content_expr
-from ocr_project_spark.functions.fuse import fuse_media_candidates
+from ocr_project_spark.functions.fuse import fuse_with_retry, fusion_order_key
 
 
 def _sort_permutation(spans: Column) -> Column:
@@ -131,53 +134,46 @@ def doc_status_expr() -> Column:
     )
 
 
-def valid_documents(docs: DataFrame) -> DataFrame:
-    """F1 validity predicate — the analog of the empty/shape checks at
-    base_engine.py:86-112.  Empty docs pass through with empty output
-    (the reference's NO-TEXT path, tesseract.py:147-157).  Kept for
-    callers that want the filtering behavior; extract() itself now
-    routes invalid docs to error-status rows instead (doc_status_expr)."""
-    return docs.where(F.col("doc_id").isNotNull())
-
-
 def _with_fused_map(
     docs: DataFrame,
     candidates: DataFrame | None,
-    early_termination: float | None = None,
     retry_candidates: DataFrame | None = None,
     retry_threshold: float = 0.3,
 ) -> DataFrame:
-    if candidates is not None:
-        if retry_candidates is not None:
-            from ocr_project_spark.functions.fuse import fuse_with_retry
+    """docs + ``fused_map``: map<offset, struct<t, c>> of each media
+    span's resolved text, NULL for documents without candidates.
 
-            fused = fuse_with_retry(
-                candidates, retry_candidates, threshold=retry_threshold
-            )
-        else:
-            fused = fuse_media_candidates(candidates, early_termination)
-        fused_map = fused.groupBy("doc_id").agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        F.col("offset"),
-                        F.struct(
-                            F.col("text").alias("t"), F.col("confidence").alias("c")
-                        ),
-                    )
-                )
-            ).alias("fused_map")
+    Without retry candidates the map holds the per-span winner — the
+    row fuse_media_candidates ranks first — with its own confidence:
+    assembly reads only ``t``, and the fused text is always the
+    winner's, so the window, Jaccard and consensus math would build
+    state nothing reads.  With retry candidates ``c`` is the fused
+    confidence of the two-pass form, whose route needs it.
+    """
+    if candidates is None:
+        return docs.withColumn(
+            "fused_map", F.lit(None).cast("map<int,struct<t:string,c:double>>")
         )
-        # The fused side is one row per media-bearing document — corpus
-        # scale, never broadcastable at 10^12 docs, and a broadcast
-        # build is a serial Amdahl term that caps scaling efficiency
-        # (measured: 0.64 -> broadcast, see tools/scaling_bench.py).
-        # Force the co-partitioned shuffled hash join.
-        return docs.join(fused_map.hint("shuffle_hash"), "doc_id", "left")
-    return docs.withColumn(
-        "fused_map",
-        F.lit(None).cast("map<int,struct<t:string,c:double>>"),
+    entry = F.struct(F.col("text").alias("t"), F.col("confidence").alias("c"))
+    if retry_candidates is not None:
+        entries = fuse_with_retry(
+            candidates, retry_candidates, threshold=retry_threshold
+        ).select("doc_id", "offset", entry.alias("w"))
+    else:
+        entries = candidates.groupBy("doc_id", "offset").agg(
+            F.min_by(entry, fusion_order_key()).alias("w")
+        )
+    # The fused side is one row per media-bearing document — corpus
+    # scale, never broadcastable at 10^12 docs, and a broadcast build
+    # is a serial Amdahl term that caps scaling efficiency (measured:
+    # 0.64 -> broadcast, see tools/scaling_bench.py).  Force the
+    # co-partitioned shuffled hash join.
+    fused_map = entries.groupBy("doc_id").agg(
+        F.map_from_entries(
+            F.collect_list(F.struct(F.col("offset"), F.col("w")))
+        ).alias("fused_map")
     )
+    return docs.join(fused_map.hint("shuffle_hash"), "doc_id", "left")
 
 
 def extract(
@@ -203,6 +199,9 @@ def extract(
     Mutually exclusive with ``early_termination`` (the reference never
     combines the PSM fallback with the engine-cascade short-circuit;
     combining them here would retry spans the gate already resolved).
+    ``early_termination`` does not change the plan: the gate settles a
+    span's fused confidence and method, never its winning text, and
+    extraction reads only that text.
 
     Never-fail contract: invalid input docs are NOT dropped — they emit
     (doc_id, [], status{ok=false, reason}) rows (doc_status_expr).  The
@@ -217,7 +216,6 @@ def extract(
     docs = _with_fused_map(
         docs.withColumn("status", doc_status_expr()),
         candidates,
-        early_termination,
         retry_candidates,
         retry_threshold,
     )

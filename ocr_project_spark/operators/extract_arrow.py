@@ -24,10 +24,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ocr_project_spark import rules
-from ocr_project_spark.functions.fuse import fuse_media_candidates
+from ocr_project_spark.operators.extract import _with_fused_map
 
 _OUT_SCHEMA = (
     "doc_id string, "
@@ -209,26 +208,7 @@ def extract_arrow_engine(
     """(doc_id, spans) [+ candidates] -> (doc_id, spans out, status) via
     a mapInArrow kernel.  ``content_mask`` is a
     ``pyarrow.Array[string] -> np.ndarray[bool]`` batch classifier."""
-    if candidates is not None:
-        fused = fuse_media_candidates(candidates)
-        fused_map = fused.groupBy("doc_id").agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        F.col("offset"),
-                        F.struct(
-                            F.col("text").alias("t"),
-                            F.col("confidence").alias("c"),
-                        ),
-                    )
-                )
-            ).alias("fused_map")
-        )
-        prepped = docs.join(fused_map, "doc_id", "left")
-    else:
-        prepped = docs.withColumn(
-            "fused_map", F.lit(None).cast("map<int,struct<t:string,c:double>>")
-        )
+    prepped = _with_fused_map(docs, candidates)
 
     mask_ref = content_mask
 

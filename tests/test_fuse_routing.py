@@ -8,6 +8,9 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from ocr_project_spark import oracle
 from ocr_project_spark.functions.fuse import (
     fuse_media_candidates,
@@ -497,3 +500,110 @@ def test_engine_languages_tolerates_scalar_shapes():
     assert engine_languages({"engines": {"a": {"languages": 5}}}) == {
         "a": None
     }
+
+
+# --- winner-only fusion inside extract() --------------------------------
+#
+# extract() builds its per-document map from min_by(..., fusion_order_key())
+# per span instead of the full window fusion; the winner must be the row
+# fuse_media_candidates ranks first, NaN/null/tied confidences included.
+# The reference here is the Spark fusion, not oracle.fuse_candidates,
+# which cannot sort a None confidence.
+
+_CAND_SCHEMA = (
+    "doc_id string, offset int, engine string, text string, confidence double"
+)
+_candidate = st.tuples(
+    st.sampled_from(["d0", "d1", "d2"]),
+    st.integers(min_value=0, max_value=3),
+    st.sampled_from(["rec_a", "rec_b", "rec_c", "rec_d", "rec_zz", None]),
+    st.sampled_from([None, "", "   ", "alpha", "alpha beta", "beta", "gamma"]),
+    st.one_of(
+        st.none(),
+        st.just(float("nan")),
+        st.sampled_from([0.0, -0.0, 0.05, 0.1, 0.5, 0.9, 0.95, 1.0]),
+        st.floats(min_value=0.0, max_value=1.0),
+    ),
+)
+
+
+def _same_winner_text(got, want) -> bool:
+    # The window's last key is coalesce(text, ''), so a NULL-text row
+    # and a ''-text row with equal confidence and engine tie exactly:
+    # either is a first-ranked row.  Any other pair of tied rows has
+    # the same text.
+    return got == want or {got, want} <= {None, ""}
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    st.lists(_candidate, min_size=1, max_size=14),
+    st.lists(st.integers(min_value=0, max_value=13), max_size=4),
+    st.sampled_from([0.5, 0.9, 0.95]),
+)
+def test_winner_map_equals_fused_text(spark, rows, dup_idx, threshold):
+    from pyspark.sql import functions as F
+
+    from ocr_project_spark.operators.extract import _with_fused_map, extract
+
+    rows = rows + [rows[i] for i in dup_idx if i < len(rows)]  # exact dupes
+    cands = spark.createDataFrame(rows, _CAND_SCHEMA)
+    media = [
+        {"kind": "media", "text": f"caption {o}", "media_ref": f"m{o}", "offset": o}
+        for o in range(4)
+    ]
+    docs = spark.createDataFrame(
+        [(d, media) for d in ("d0", "d1", "d2", "d3")],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+
+    got = {
+        (r["doc_id"], r["offset"]): r["w"]["t"]
+        for r in _with_fused_map(docs, cands)
+        .select("doc_id", F.explode("fused_map").alias("offset", "w"))
+        .collect()
+    }
+    want = {
+        (r["doc_id"], r["offset"]): r["text"]
+        for r in fuse_media_candidates(cands).collect()
+    }
+    assert got.keys() == want.keys()
+    for key, text in want.items():
+        assert _same_winner_text(got[key], text), (key, got[key], text)
+
+    routed = {
+        (r["doc_id"], r["offset"]): r["text"]
+        for r in fuse_media_candidates_routed(cands, threshold).collect()
+    }
+    assert routed.keys() == want.keys()
+    for key, text in want.items():
+        assert _same_winner_text(routed[key], text), (key, routed[key], text)
+
+    def spans(df):
+        return {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in df.collect()}
+
+    plain = spans(extract(docs, cands))
+    assert plain == spans(extract(docs, cands, early_termination=threshold))
+    for d, out in plain.items():
+        for _, text, ref, o in out:
+            assert o == int(ref[1:])
+            if (d, o) in want:
+                assert _same_winner_text(text, want[(d, o)])
+            else:
+                assert text == f"caption {o}"
+
+
+def test_extract_plan_has_no_window(corpus_dfs):
+    """extract() without retry candidates ranks no candidates: no
+    Window operator, where the retry path keeps the full fusion."""
+    from ocr_project_spark.operators.extract import extract
+
+    docs_df, cands_df = corpus_dfs
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "Window" not in plan(extract(docs_df, cands_df))
+    assert "Window" not in plan(extract(docs_df, cands_df, early_termination=0.5))
+    assert "Window" in plan(extract(docs_df, cands_df, retry_candidates=cands_df))

@@ -150,10 +150,10 @@ def test_extract_documents_convenience(spark, dirty_corpus, tmp_path):
         measure_improvement=True,
     )
     assert "improvement" in out.columns
-    # early_termination threads into the fusion stage; the winner TEXT
-    # is unchanged by design (only confidence/method metadata differ,
-    # pinned at fusion level in test_fuse_routing), so span output
-    # stays identical while the gate is active in the plan
+    # early_termination is accepted and threads through; the gate only
+    # changes fused confidence/method metadata (pinned at fusion level
+    # in test_fuse_routing), never the winner TEXT extraction reads, so
+    # span output stays identical
     et = engine.extract_documents(
         docs_df, cands_df, spark=spark, early_termination=0.5
     )

@@ -268,11 +268,11 @@ def test_corpus_scorers_invariant_to_partition_count(spark):
     st.integers(min_value=1, max_value=9),
 )
 def test_window_documents_properties(batch_texts, window, raw_stride):
-    stride = min(raw_stride, window)  # operator enforces stride <= window
     """Fuzzed invariants for the strided chunker: exactly
     1+max(0,ceil((n-W)/S)) windows per doc; window i starts at i*S and
     carries min(W, n-i*S) tokens; stride-stepped reconstruction equals
     the normalized token stream; no window empty unless the doc is."""
+    stride = min(raw_stride, window)  # operator enforces stride <= window
     import math
 
     from ocr_project_spark.operators.pack import window_documents
@@ -303,3 +303,16 @@ def test_window_documents_properties(batch_texts, window, raw_stride):
             assert r.text == " ".join(expect)
             rebuilt.extend(expect if j == n_win - 1 else expect[:stride])
         assert rebuilt[: len(toks)] == toks
+
+
+def test_window_documents_rejects_stride_above_window(spark):
+    """stride > window would skip the tokens between windows, so the
+    operator refuses it up front rather than emitting lossy windows."""
+    import pytest
+
+    from ocr_project_spark.operators.pack import window_documents
+
+    df = spark.createDataFrame([(0, "a b c d e f")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="stride must be <= window"):
+        window_documents(df, window=3, stride=4)
+    assert window_documents(df, window=3, stride=3).count() == 2

@@ -79,7 +79,31 @@ def scan_lines(plan: str) -> list[str]:
     return keep
 
 
+def preserved_notes(plans_path: str) -> str:
+    """The hand-written notes of an existing PLANS.md, from NOTES_MARKER
+    on ("" when there is no file yet).  A file without the marker is an
+    error, not an empty note section: rewriting it would silently drop
+    whatever was written by hand."""
+    if not os.path.exists(plans_path):
+        return ""
+    with open(plans_path) as f:
+        prev = f.read()
+    if NOTES_MARKER not in prev:
+        raise SystemExit(
+            f"{plans_path} lacks the notes marker {NOTES_MARKER!r}; "
+            "restore it above the hand-written notes (or move the file "
+            "away) before regenerating"
+        )
+    return prev[prev.index(NOTES_MARKER):]
+
+
 def main() -> None:
+    # the audit owns only the generated plan evidence above the marker;
+    # read the hand-written notes below it first, so a missing marker
+    # fails before any Spark work
+    plans_path = os.path.join(ROOT, "PLANS.md")
+    notes = preserved_notes(plans_path)
+
     from ocr_project_spark import harness
     from ocr_project_spark.operators.extract import extract
     from ocr_project_spark.session import get_spark
@@ -170,14 +194,6 @@ def main() -> None:
         f"queries broadcast: {has_bcast}; narrow Python partial top-k: {has_arrow}"
     )
     out.append("")
-    # preserve the hand-written bench/continuity notes below the
-    # marker — the audit owns only the generated plan evidence above it
-    plans_path = os.path.join(ROOT, "PLANS.md")
-    notes = ""
-    if os.path.exists(plans_path):
-        prev = open(plans_path).read()
-        if NOTES_MARKER in prev:
-            notes = prev[prev.index(NOTES_MARKER):]
     with open(plans_path, "w") as f:
         f.write("\n".join(out) + "\n")
         if notes:
