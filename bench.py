@@ -157,31 +157,22 @@ def main() -> None:
     timings["extract_pipeline_bucketed"] = round(dtb, 3)
     docs_per_sec_bucketed = round(N_BENCH_DOCS / dtb, 1)
 
-    # the pandas-classifier kernel (compatibility escape hatch for
-    # pandas-in/out learned-model classifiers; the pandas API's
-    # default kernel routes through the arrow path below).  Since the
-    # classifier-only crossing landed (extract_pandas.py module
-    # docstring: texts in, boolean mask out, HOF assembly JVM-side)
-    # its cost is ~1.3-1.5x the HOF plan — tracked to keep that bound
-    # honest
+    # the custom-classifier crossing (texts in, keep mask out; the
+    # density rule passed as a callable so it crosses rather than
+    # running as extract()): ~1.3-1.5x the HOF plan — tracked to keep
+    # that bound honest
+    from ocr_project_spark.functions.engine_udfs import density_classifier
     from ocr_project_spark.harness import _ensure_pyfiles
     from ocr_project_spark.operators.extract_pandas import extract_pandas_engine
 
     _ensure_pyfiles(spark)
     dtp = _best_of(
         PIPELINE_REPS,
-        lambda: _noop_sink(extract_pandas_engine(docs, cands, kernel="pandas")),
+        lambda: _noop_sink(
+            extract_pandas_engine(docs, cands, classifier=density_classifier)
+        ),
     )
     timings["extract_pipeline_pandas_kernel"] = round(dtp, 3)
-
-    # the zero-copy mapInArrow engine path: python kernel without the
-    # Arrow->pandas nested-dict conversion tax
-    from ocr_project_spark.operators.extract_arrow import extract_arrow_engine
-
-    dta = _best_of(
-        PIPELINE_REPS, lambda: _noop_sink(extract_arrow_engine(docs, cands))
-    )
-    timings["extract_pipeline_arrow_udf"] = round(dta, 3)
 
     # skewed-corpus regime: periodic mega-docs at ~100x the regular P99
     # span count (12000 vs ~120) — the one-straggler-task case

@@ -125,7 +125,14 @@ def build_parser() -> argparse.ArgumentParser:
         "(flagged set a few %% of the corpus); the default shuffle "
         "path degrades gracefully when it is not.",
     )
-    p.add_argument("--exact-dedup", action="store_true")
+    p.add_argument(
+        "--exact-dedup", action="store_true",
+        help="drop exact duplicates by normalized text, keeping the "
+        "smallest non-null doc_id's row.  Where rows share a doc_id it "
+        "keeps one row per distinct normalized text, whereas "
+        "operators.dedup.exact_dedup() keeps every row carrying the "
+        "keeper id",
+    )
     p.add_argument(
         "--lm-cutoffs", default=None, metavar="T1,T2",
         help="bigram-LM avg_nll band cutoffs (corpus self-trained)",

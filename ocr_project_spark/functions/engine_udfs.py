@@ -8,9 +8,9 @@ engines/tesseract.py:96-98).  The Spark-native analog:
 
   * a CLASSIFIERS registry of *batch* functions
     (pandas.Series of span texts) -> (boolean content mask)
-  * heavyweight state initialized lazily once per python worker via
-    the iterator-of-batches mapInPandas form (the standard
-    model-loading pattern) — see operators/extract_pandas.py.
+  * resolved lazily on the python worker inside the scalar
+    Arrow-batched pandas_udf that crosses only texts in and a keep
+    mask out — see operators/extract_pandas.py.
 
 Classifiers must agree with rules.is_content for the default density
 rule; tests enforce engine-path equality against the HOF plan.

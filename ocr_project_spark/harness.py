@@ -233,28 +233,21 @@ def _spans_out_flat(out: DataFrame) -> DataFrame:
     )
 
 
-# 1c/1d. The python-kernel engine paths, oracle-checked end-to-end
-# against DuckDB (same semantics as extract(), so they share the
-# chunked-extraction oracle): the vectorized pandas kernel and the
-# zero-copy mapInArrow kernel — the north-star's "batched Arrow
-# tokenizer" stage.
+# 1c. The custom-classifier path, oracle-checked end-to-end against
+# DuckDB (same semantics as extract(), so it shares the
+# chunked-extraction oracle): the density rule passed as a callable
+# takes the pandas_udf classifier crossing rather than the HOF plan.
 def q_extract_pandas_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ocr_project_spark.functions.engine_udfs import density_classifier
     from ocr_project_spark.operators.extract_pandas import extract_pandas_engine
 
     _ensure_pyfiles(spark)
     return _spans_out_flat(
         extract_pandas_engine(
-            _derived_span_docs(spark, sf_dir), None, kernel="pandas"
+            _derived_span_docs(spark, sf_dir),
+            None,
+            classifier=density_classifier,
         )
-    )
-
-
-def q_extract_arrow_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_project_spark.operators.extract_arrow import extract_arrow_engine
-
-    _ensure_pyfiles(spark)
-    return _spans_out_flat(
-        extract_arrow_engine(_derived_span_docs(spark, sf_dir), None)
     )
 
 
@@ -3615,6 +3608,10 @@ FROM t GROUP BY 1, 2
 # takes a driver slot; bucket_ladder rotates to LOCAL_QUERIES (its
 # C9-C12 bucketing family keeps driver coverage via quality_scores,
 # driver-green every round).
+#
+# The mapInArrow extraction path is gone (it ran only the built-in
+# rule, which the HOF plan runs), and with it extract_arrow_spans;
+# window_docs, which never had a driver row, takes its slot.
 # --------------------------------------------------------------------
 SPARK_QUERIES = {
     # --- promoted in round-5 continuation: first driver row ---
@@ -3655,7 +3652,9 @@ SPARK_QUERIES = {
     "text_profile": q_text_profile,  # lang_id + fingerprint + token_stats
     # --- stable, driver-green in earlier rounds ---
     "extract_clean_spans": q_extract_clean_spans,
-    "extract_arrow_spans": q_extract_arrow_spans,
+    # first driver row: strided pretraining windows (the
+    # pack_sequences dual)
+    "window_docs": q_window_docs,
     "fuse_candidates": q_fuse_candidates,
     "fusion_routing": q_fusion_routing,
     "session_stats": q_session_stats,
@@ -3708,7 +3707,7 @@ ORACLE_SQL = {
     "reading_order": _SQL_READING_ORDER,
     "text_profile": _SQL_TEXT_PROFILE,
     "extract_clean_spans": _SQL_EXTRACT,
-    "extract_arrow_spans": _SQL_EXTRACT_CHUNKED,
+    "window_docs": _SQL_WINDOW_DOCS,
     "fuse_candidates": _SQL_FUSE,
     "fusion_routing": _SQL_FUSION_ROUTING,
     "session_stats": _SQL_SESSION,
@@ -3729,7 +3728,7 @@ ORACLE_SQL = {
 
 # Folded out of the driver contract (cap), still verified locally on
 # every tools/compare_oracle.py run and by pytest: engine-path
-# duplicates (pytest pins all four paths row-identical, so one driver
+# duplicates (pytest pins all three paths row-identical, so one driver
 # row covers them), the 16-bit simhash demo tier, the standalone forms
 # of the merged queries, and the three by-design-no-oracle queries.
 LOCAL_QUERIES = {
@@ -3754,8 +3753,6 @@ LOCAL_QUERIES = {
     # rotated in the round-5 continuation: C9-C12 bucketing family
     # keeps driver coverage via quality_scores
     "bucket_ladder": q_bucket_ladder,
-    # strided pretraining windows (the pack_sequences dual)
-    "window_docs": q_window_docs,
     # disjoint deterministic train/val/test bands (hash_sample's
     # partition form)
     "split_corpus": q_split_corpus,
@@ -3804,7 +3801,6 @@ LOCAL_ORACLE_SQL = {
     "extract_chunked_spans": _SQL_EXTRACT_CHUNKED,
     "extract_pandas_spans": _SQL_EXTRACT_CHUNKED,
     "bucket_ladder": _SQL_BUCKET,
-    "window_docs": _SQL_WINDOW_DOCS,
     "split_corpus": _SQL_SPLIT_CORPUS,
     "gap_class": _SQL_GAP_CLASS,
     "customers_no_orders": _SQL_ANTI,

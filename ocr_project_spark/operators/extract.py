@@ -29,6 +29,8 @@ hash(doc_id)-partitioned by plans/partitioning.py.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -57,36 +59,49 @@ def _sort_permutation(spans: Column) -> Column:
     return F.array_sort(pairs)
 
 
-def assemble_expr(spans: Column, fused_map: Column) -> Column:
+def _media_or_content(s: Column) -> Column:
+    """The built-in keep rule: media spans always, text spans when the
+    boilerplate classifier calls them content."""
+    return (s["kind"] == F.lit("media")) | is_content_expr(s["text"])
+
+
+def assemble_expr(
+    spans: Column,
+    fused_map: Column,
+    keep: Callable[[Column], Column] = _media_or_content,
+) -> Column:
     """spans + map<offset, struct<t,c>> -> output span array.
 
     One gather pass resolves media text from the fused map and keeps
-    content spans (boilerplate strip); a final transform assigns the
-    dense ``order``.  All passes are codegen'd HOFs — no Python.
+    the spans ``keep`` accepts (boilerplate strip); a final transform
+    assigns the dense ``order``.  All passes are codegen'd HOFs — no
+    Python.  ``keep`` is a span-struct predicate; a custom classifier
+    (operators/extract_pandas.py) swaps its keep mask in through it.
     """
     gathered = F.transform(
         _sort_permutation(spans),
         lambda p: F.element_at(spans, p["idx"] + 1),
     )
-    kept = F.filter(
-        gathered,
-        lambda s: (s["kind"] == F.lit("media")) | is_content_expr(s["text"]),
-    )
+    kept = F.filter(gathered, keep)
     return F.transform(
         kept,
         lambda s, i: F.struct(
             s["kind"].alias("kind"),
-            F.when(
-                (s["kind"] == F.lit("media"))
-                & F.element_at(fused_map, s["offset"]).isNotNull(),
-                F.element_at(fused_map, s["offset"])["t"],
-            )
-            .otherwise(s["text"])
-            .alias("text"),
+            resolved_text(s, fused_map).alias("text"),
             s["media_ref"].alias("media_ref"),
             i.cast("int").alias("order"),
         ),
     )
+
+
+def resolved_text(s: Column, fused_map: Column) -> Column:
+    """A span's output text: a media span's fused text when the map has
+    its offset, else the span's own text."""
+    return F.when(
+        (s["kind"] == F.lit("media"))
+        & F.element_at(fused_map, s["offset"]).isNotNull(),
+        F.element_at(fused_map, s["offset"])["t"],
+    ).otherwise(s["text"])
 
 
 SPAN_ARRAY_TYPE = (

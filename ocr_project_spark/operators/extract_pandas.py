@@ -1,20 +1,14 @@
-"""The extraction pipeline's Arrow/pandas-UDF engine path.
+"""The extraction pipeline's custom-classifier path: one Arrow crossing.
 
-Same semantics as operators/extract.py (the built-in-HOF fast path),
-but the boilerplate classifier runs as a vectorized pandas kernel —
-the shape the reference's recognizer engines take in the new
-architecture (SURVEY.md section 2.9): Arrow batches of many documents
-in, batches out, heavyweight classifier state initialized per python
-worker (the lazy-init pattern of tesseract.py:96-98).
-
-Use this path when the classifier genuinely needs Python (learned
-models, tokenizers); the HOF path wins whenever the rule is
-expression-expressible.  For the built-in classifier the default
-``kernel="auto"`` routes through the zero-copy mapInArrow kernel
-(operators/extract_arrow.py) — the recommended python-kernel route —
-and the pandas kernel here remains the compatibility escape hatch for
-pandas-in/pandas-out classifiers.  Tests pin exact output equality
-across all paths.
+Same semantics as operators/extract.py (the built-in-HOF plan), but
+the boilerplate classifier is a Python batch function — a learned
+model, a tokenizer — run as a vectorized pandas kernel, the shape the
+reference's recognizer engines take in the new architecture (SURVEY.md
+section 2.9): Arrow batches of many documents in, batches out,
+heavyweight classifier state initialized per python worker (the
+lazy-init pattern of tesseract.py:96-98).  The built-in "density"
+classifier never crosses: it is expression-expressible, so it runs as
+extract() itself.
 
 CLASSIFIER-ONLY CROSSING: the only thing that crosses Arrow is what
 the Python classifier actually needs — one ``array<string>`` column
@@ -22,13 +16,10 @@ of media-resolved span texts in (resolved JVM-side with the exact
 expression the HOF path uses), one ``array<boolean>`` keep mask out,
 as a scalar Arrow-batched ``pandas_udf``.  Sort, keep-gather, dense
 re-rank, media resolution, and the never-fail status all stay in the
-JVM HOF machinery (operators/extract.py's expressions, with the
-classifier column swapped in for the built-in predicate).  History:
-the first kernel crossed nested span structs (>50% of wall time in
-dict conversion), the second crossed four parallel primitive arrays
-in and three out (~1.9-2.1x the HOF plan — the round-3/4 "2x bar"
-findings); shipping only texts->booleans removes the output payload
-and every non-text input column from the crossing entirely.
+JVM: the mask is swapped into extract.assemble_expr as its keep
+predicate.  Nothing wider crosses because the conversion is the cost:
+nested span structs spent >50% of wall time becoming Python dicts, and
+parallel primitive arrays in and out ran ~2x the HOF plan.
 
 Inside the kernel everything is flat-array vectorized: one
 np.concatenate over the Arrow batch's list cells, one classifier call
@@ -42,6 +33,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ocr_project_spark.operators.extract import (
+    SPAN_ARRAY_TYPE,
+    _with_fused_map,
+    assemble_expr,
+    doc_status_expr,
+    extract,
+    resolved_text,
+)
+
 
 def _is_null_cell(x) -> bool:
     """Arrow->pandas renders a NULL list cell as None or NaN depending
@@ -110,97 +111,52 @@ def extract_pandas_engine(
     docs: DataFrame,
     candidates: DataFrame | None = None,
     classifier="density",
-    kernel: str = "auto",
 ) -> DataFrame:
-    """(doc_id, spans) [+ candidates] -> (doc_id, spans out, status),
-    via the pandas-API engine path.  Invalid docs surface as
+    """(doc_id, spans) [+ candidates] -> (doc_id, spans out, status)
+    with a pluggable boilerplate classifier.  Invalid docs surface as
     status.ok=false rows with empty spans (never-fail contract), in
     lockstep with operators/extract.extract.
 
-    ``kernel`` picks the physical python kernel:
-
-      "auto" (default)  the built-in "density" classifier routes
-                        through the zero-copy mapInArrow kernel
-                        (operators/extract_arrow.py); a custom/callable
-                        classifier (a learned model expecting pandas
-                        Series) falls back to the pandas kernel
-                        automatically.
-      "pandas"          force the pandas-classifier kernel — the
-                        escape hatch for classifiers that genuinely
-                        need pandas in/out.  Only resolved texts and a
-                        boolean keep mask cross Arrow (module
-                        docstring); everything else is the HOF plan.
-      "arrow"           force the arrow kernel (default classifier
-                        only).
-
-    All kernels are row-identical (pinned by tests/test_extract_pandas
-    and the shared extraction oracle)."""
-    if kernel not in ("auto", "pandas", "arrow"):
-        raise ValueError(f"unknown kernel {kernel!r}")
-    use_arrow = kernel == "arrow" or (kernel == "auto" and classifier == "density")
-    if use_arrow:
-        if classifier != "density":
-            raise ValueError(
-                "kernel='arrow' supports only the built-in 'density' "
-                "classifier; pass kernel='pandas' for custom classifiers"
-            )
-        from ocr_project_spark.operators.extract_arrow import (
-            extract_arrow_engine,
-        )
-
-        return extract_arrow_engine(docs, candidates)
-
-    from ocr_project_spark.operators.extract import (
-        SPAN_ARRAY_TYPE,
-        _sort_permutation,
-        _with_fused_map,
-        doc_status_expr,
-    )
+    ``classifier`` is a registered name (functions/engine_udfs) or a
+    ``pandas.Series[str] -> bool array`` callable.  The built-in
+    "density" name is extract(docs, candidates) itself, no Python
+    crossing; anything else — a callable density_classifier included —
+    runs through the classifier-only pandas_udf crossing (module
+    docstring).  Both are row-identical for the density rule (pinned
+    by tests/test_extract_pandas and the shared extraction oracle)."""
+    if classifier == "density":
+        return extract(docs, candidates)
 
     prepped = _with_fused_map(
         docs.withColumn("status", doc_status_expr()), candidates
     )
-
-    # JVM-side media resolution — the exact expression of the HOF path
-    # (extract.assemble_expr) — feeding the ONLY column that crosses
-    # into Python: the per-doc resolved-texts array, in storage order.
     fm = F.col("fused_map")
-    resolved_texts = F.transform(
-        "spans",
-        lambda s: F.when(
-            (s["kind"] == F.lit("media"))
-            & F.element_at(fm, s["offset"]).isNotNull(),
-            F.element_at(fm, s["offset"])["t"],
-        ).otherwise(s["text"]),
-    )
-    with_keep = prepped.withColumn(
+    # The ONLY column that crosses into Python: each doc's
+    # media-resolved texts, in storage order.
+    resolved_texts = F.transform("spans", lambda s: resolved_text(s, fm))
+    # Each span carries its mask element (storage index) into
+    # assemble_expr; the keep gate is (media | mask) like the built-in
+    # (media | is_content), a null element gating to not-kept.  The
+    # output struct projects kind/text/media_ref/order only, so the
+    # tag drops out.  The tagged array is its own projection: inlined
+    # into assemble_expr's gather lambda it would be rebuilt once per
+    # span.
+    tagged = prepped.withColumn(
         "_keep", _keep_mask_udf(classifier)(resolved_texts)
-    )
-
-    # JVM-side assembly: extract.assemble_expr's stable sort + dense
-    # re-rank, with the kernel's keep mask (indexed by storage idx)
-    # swapped in for the built-in content predicate.  The keep gate is
-    # (media | mask) exactly like the HOF plan's (media | is_content);
-    # a null mask element gates to False (not-kept), matching the
-    # built-in predicate's null semantics.
-    spans, keep = F.col("spans"), F.col("_keep")
-    kept_pairs = F.filter(
-        _sort_permutation(spans),
-        lambda p: (
-            F.element_at(spans, p["idx"] + 1)["kind"] == F.lit("media")
-        )
-        | F.coalesce(F.element_at(keep, p["idx"] + 1), F.lit(False)),
-    )
-    assembled = F.transform(
-        kept_pairs,
-        lambda p, i: F.struct(
-            F.element_at(spans, p["idx"] + 1)["kind"].alias("kind"),
-            F.element_at(resolved_texts, p["idx"] + 1).alias("text"),
-            F.element_at(spans, p["idx"] + 1)["media_ref"].alias("media_ref"),
-            i.cast("int").alias("order"),
+    ).withColumn(
+        "spans",
+        F.transform(
+            "spans",
+            lambda s, i: s.withField("_k", F.element_at(F.col("_keep"), i + 1)),
         ),
     )
-    return with_keep.select(
+    assembled = assemble_expr(
+        F.col("spans"),
+        fm,
+        lambda s: (s["kind"] == F.lit("media"))
+        | F.coalesce(s["_k"], F.lit(False)),
+    )
+    return tagged.select(
         "doc_id",
         F.when(F.col("status.ok"), assembled)
         .otherwise(F.array().cast(SPAN_ARRAY_TYPE))

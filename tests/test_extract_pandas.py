@@ -1,7 +1,7 @@
-"""Engine-path equivalence: mapInPandas classifier engine vs HOF plan.
+"""Engine-path equivalence: pandas_udf classifier crossing vs HOF plan.
 
 The two physical strategies (built-in expressions vs Arrow-batched
-pandas kernel) must produce byte-identical span sequences — the analog
+pandas classifier) must produce byte-identical span sequences — the analog
 of the reference's single- vs multi-engine golden outputs agreeing
 (/root/reference/results/01_simple_ocr.txt vs 02_multi_engine_ocr.txt).
 """
@@ -32,7 +32,9 @@ def to_dict(df):
 def test_pandas_engine_matches_hof(corpus_dfs):
     docs_df, cands_df = corpus_dfs
     hof = to_dict(extract(docs_df, cands_df))
-    eng = to_dict(extract_pandas_engine(docs_df, cands_df, kernel="pandas"))
+    eng = to_dict(
+        extract_pandas_engine(docs_df, cands_df, classifier=density_classifier)
+    )
     assert set(hof) == set(eng)
     bad = [k for k in hof if hof[k] != eng[k]]
     assert not bad, f"{len(bad)} docs differ; first: {bad[0]}: {hof[bad[0]][:3]} vs {eng[bad[0]][:3]}"
@@ -41,31 +43,47 @@ def test_pandas_engine_matches_hof(corpus_dfs):
 def test_pandas_engine_no_candidates(corpus_dfs):
     docs_df, _ = corpus_dfs
     hof = to_dict(extract(docs_df, None))
-    eng = to_dict(extract_pandas_engine(docs_df, None, kernel="pandas"))
+    eng = to_dict(
+        extract_pandas_engine(docs_df, None, classifier=density_classifier)
+    )
     assert hof == eng
 
 
-def test_default_kernel_routes_to_arrow(corpus_dfs):
-    """kernel='auto' + the built-in classifier must take the arrow
-    kernel (the recommended python route) and still match the forced
-    pandas kernel row-for-row; a custom classifier under 'arrow' is a
-    loud error, not a silent fallback."""
-    import pytest as _pytest
+def _python_nodes(df) -> dict[str, int]:
+    import re
 
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {
+        node: len(re.findall(rf"\b{node}\b", plan))
+        for node in (
+            "ArrowEvalPython",
+            "BatchEvalPython",
+            "MapInArrow",
+            "PythonMapInArrow",
+        )
+    }
+
+
+def test_builtin_classifier_is_the_hof_plan(corpus_dfs):
+    """The built-in classifier runs as extract() itself — same rows, no
+    Python node in the plan; a callable classifier crosses once, as
+    one ArrowEvalPython."""
     docs_df, cands_df = corpus_dfs
-    auto = to_dict(extract_pandas_engine(docs_df, cands_df))
-    forced_pandas = to_dict(
-        extract_pandas_engine(docs_df, cands_df, kernel="pandas")
+    default = extract_pandas_engine(docs_df, cands_df)
+    assert to_dict(default) == to_dict(extract(docs_df, cands_df))
+    # a fresh plan: AQE prints initial and final plans once executed
+    builtin = _python_nodes(extract_pandas_engine(docs_df, cands_df))
+    assert sum(builtin.values()) == 0, builtin
+
+    crossing = _python_nodes(
+        extract_pandas_engine(docs_df, cands_df, classifier=density_classifier)
     )
-    assert auto == forced_pandas
-
-    def keep_all(s: pd.Series) -> np.ndarray:
-        return np.ones(len(s), dtype=bool)
-
-    with _pytest.raises(ValueError, match="arrow"):
-        extract_pandas_engine(docs_df, None, classifier=keep_all, kernel="arrow")
-    with _pytest.raises(ValueError, match="kernel"):
-        extract_pandas_engine(docs_df, None, kernel="vectorized")
+    assert crossing == {
+        "ArrowEvalPython": 1,
+        "BatchEvalPython": 0,
+        "MapInArrow": 0,
+        "PythonMapInArrow": 0,
+    }
 
 
 def test_density_classifier_matches_rules():

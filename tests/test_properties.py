@@ -4,7 +4,9 @@
   Spark expressions) agree on arbitrary text — the two implementations
   cannot drift (section 7.5 item 5).
 * extraction is invariant to storage permutation of the span array and
-  to the partition count.
+  to the partition count, and its three physical paths (HOF plan,
+  chunked plan, pandas classifier crossing) agree on generated span
+  arrays.
 """
 
 from __future__ import annotations
@@ -100,6 +102,101 @@ def test_extract_invariant_to_partition_count(spark, corpus_dfs):
     a = _extract_dict(docs_df.repartition(1), cands_df.repartition(1))
     b = _extract_dict(docs_df.repartition(16), cands_df.repartition(16))
     assert a == b
+
+
+# Span arrays for the extraction-path property.  Offsets repeat (range
+# 0..6); a null kind or offset (malformed span) is rare, so most
+# documents assemble; text straddles the 8-token content floor and the
+# 0.4 link-density cap.
+_words = st.lists(st.sampled_from(["w", "data", "<a>", "nav"]), max_size=12)
+_span_text = st.one_of(
+    _words.map(" ".join), st.sampled_from([None, "", " \t\n"])
+)
+_span = st.tuples(
+    st.integers(0, 60).map(
+        lambda k: None if k == 60 else ("media" if k % 3 == 0 else "text")
+    ),
+    _span_text,
+    st.sampled_from(["m", None]),
+    st.integers(0, 60).map(lambda o: None if o == 60 else o % 7),
+)
+_spans = st.tuples(st.integers(0, 9), st.lists(_span, max_size=8)).map(
+    lambda t: None if t[0] == 0 else t[1]
+)
+_cand = st.tuples(
+    st.integers(0, 24),
+    st.integers(0, 6),
+    st.sampled_from(["rec_a", "rec_b", "rec_c", "rec_d"]),
+    _span_text,
+    st.sampled_from([0.0, 0.05, 0.3, 0.9, 0.9, 1.0]),
+)
+# Every example carries these alongside the generated documents: a null
+# doc_id, null and empty spans, duplicate offsets on text and media
+# spans, and media spans with and without candidates (offsets 1 and 2
+# of "anchor_media" get candidates below, 5 does not).
+_ANCHOR_DOCS = [
+    (None, [("text", "w w w w w w w w", None, 0)]),
+    ("anchor_null_spans", None),
+    ("anchor_empty", []),
+    (
+        "anchor_media",
+        [
+            ("media", "caption 2", "m", 2),
+            ("text", "data data data data data data data data", None, 1),
+            ("media", "caption 1", "m", 1),
+            ("media", "caption 5", "m", 5),
+            ("text", "w <a> w w w w w w w", None, 1),
+            ("media", "caption 2 again", "m", 2),
+        ],
+    ),
+]
+_ANCHOR_CANDS = [
+    ("anchor_media", 1, "rec_a", "fused one", 0.9),
+    ("anchor_media", 2, "rec_b", "fused two", 0.3),
+    ("anchor_media", 2, "rec_a", None, 0.3),
+]
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(_spans, min_size=1, max_size=25), st.lists(_cand, max_size=40))
+def test_extraction_paths_agree_on_generated_spans(spark, span_arrays, cand_rows):
+    """extract, extract_chunked (2 spans per chunk, so every document
+    with 3+ spans crosses chunk boundaries) and the pandas classifier
+    crossing give the same (doc_id, status, spans) rows."""
+    from ocr_project_spark import schema
+    from ocr_project_spark.functions.engine_udfs import density_classifier
+    from ocr_project_spark.operators.extract import extract_chunked
+    from ocr_project_spark.operators.extract_pandas import extract_pandas_engine
+
+    docs = spark.createDataFrame(
+        _ANCHOR_DOCS + [(f"d{i}", spans) for i, spans in enumerate(span_arrays)],
+        schema.DOCUMENTS_SPANS,
+    )
+    cands = spark.createDataFrame(
+        _ANCHOR_CANDS + [(f"d{i}", *rest) for i, *rest in cand_rows],
+        schema.MEDIA_CANDIDATES,
+    )
+
+    def rows(df):
+        return sorted(
+            (
+                (
+                    r["doc_id"] or "",
+                    tuple(r["status"]),
+                    [tuple(s) for s in r["spans"]],
+                )
+                for r in df.collect()
+            ),
+            key=repr,
+        )
+
+    want = rows(extract(docs, cands))
+    assert len(want) == len(_ANCHOR_DOCS) + len(span_arrays)
+    assert rows(extract_chunked(docs, cands, max_spans_per_chunk=2)) == want
+    assert (
+        rows(extract_pandas_engine(docs, cands, classifier=density_classifier))
+        == want
+    )
 
 
 # dirtier alphabet for the normalizer lockstep property: control chars,

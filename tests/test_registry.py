@@ -1,7 +1,7 @@
 """Driver-contract registry invariants (no Spark session needed).
 
 The correctness driver samples the first 50 queries() entries in dict
-order, so the registry must stay at exactly <= 50 entries, every one
+order, so the registry must hold exactly 50 entries, every one
 oracle-bearing; the folded-out demos live in LOCAL_QUERIES and must
 not collide with driver keys.
 """
@@ -12,7 +12,7 @@ from ocr_project_spark import harness
 
 
 def test_driver_registry_within_cap_and_fully_oracled():
-    assert len(harness.SPARK_QUERIES) <= 50
+    assert len(harness.SPARK_QUERIES) == 50
     assert set(harness.ORACLE_SQL) == set(harness.SPARK_QUERIES)
     assert all(callable(f) for f in harness.SPARK_QUERIES.values())
     assert all(

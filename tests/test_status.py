@@ -2,8 +2,8 @@
 dropped rows (reference pipeline.py:286-309 / engine_manager.py:132-142
 turn per-item errors into error results; a batch never dies).
 
-All four physical paths (HOF plan, chunked plan, pandas engine, arrow
-engine) and the pure-Python oracle must agree doc-for-doc on
+All three physical paths (HOF plan, chunked plan, pandas classifier
+crossing) and the pure-Python oracle must agree doc-for-doc on
 (ok, reason, spans) — including on a null span *element*, which every
 path must classify as malformed_span rather than crash.
 """
@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 
 from ocr_project_spark import oracle, schema
+from ocr_project_spark.functions.engine_udfs import density_classifier
 from ocr_project_spark.operators.extract import extract, extract_chunked
 from ocr_project_spark.operators.extract_pandas import extract_pandas_engine
 
@@ -68,14 +69,9 @@ def test_chunked_path_emits_status_rows(bad_corpus):
 
 
 def test_pandas_path_emits_status_rows(bad_corpus):
-    got = collect_status(extract_pandas_engine(bad_corpus, None, kernel="pandas"))
-    assert got == EXPECTED
-
-
-def test_arrow_path_emits_status_rows(bad_corpus):
-    from ocr_project_spark.operators.extract_arrow import extract_arrow_engine
-
-    got = collect_status(extract_arrow_engine(bad_corpus, None))
+    got = collect_status(
+        extract_pandas_engine(bad_corpus, None, classifier=density_classifier)
+    )
     assert got == EXPECTED
 
 
