@@ -20,11 +20,16 @@ the DataFrame and each stage is a columnar transformation:
      boilerplate strip (functions/classify.py), dense re-rank ->
      (kind, text, media_ref, order)
 
-Stages 1+5 are pure codegen'd expressions; the only Python-free
-shuffles are the two hash exchanges in 2-4.  Scale note: at 10^12 docs
-the fused side of the join is ~1 row per doc (pre-aggregated), so AQE
-can pick a shuffled hash join with skew splitting; the docs side is
-hash(doc_id)-partitioned by plans/partitioning.py.
+Every stage runs in the JVM with no Python; the only shuffles are the
+two hash exchanges in 2-4.  Stage 5's higher-order functions are
+``CodegenFallback``: their lambda bodies are interpreted per element,
+with no common-subexpression elimination, so a per-span value the
+lambda uses twice is bound once (functions/classify.is_content_expr).
+
+Scale note: at 10^12 docs the fused side of the join is ~1 row per doc
+(pre-aggregated), so AQE can pick a shuffled hash join with skew
+splitting; the docs side is hash(doc_id)-partitioned by
+plans/partitioning.py.
 """
 
 from __future__ import annotations
@@ -74,8 +79,9 @@ def assemble_expr(
 
     One gather pass resolves media text from the fused map and keeps
     the spans ``keep`` accepts (boilerplate strip); a final transform
-    assigns the dense ``order``.  All passes are codegen'd HOFs — no
-    Python.  ``keep`` is a span-struct predicate; a custom classifier
+    assigns the dense ``order``.  All passes are JVM-side HOFs — no
+    Python — whose lambdas are interpreted per element, not codegen'd.
+    ``keep`` is a span-struct predicate; a custom classifier
     (operators/extract_pandas.py) swaps its keep mask in through it.
     """
     gathered = F.transform(

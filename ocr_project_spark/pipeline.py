@@ -11,7 +11,8 @@ collapse, zero-width/punctuation squeeze per tier) — applied after
 classification so the boilerplate decision is taken on raw input,
 matching oracle.extract_corpus(..., normalize=tier).
 
-All stages remain pure codegen'd column expressions; composing the
+All stages remain JVM-side column expressions (the per-span ones are
+higher-order functions, interpreted per element); composing the
 normalizer adds zero shuffles and zero Python.
 """
 

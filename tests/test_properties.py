@@ -12,13 +12,14 @@
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ocr_project_spark import rules
 from ocr_project_spark.functions.classify import (
     is_content_expr,
+    jaccard_expr,
     link_density_expr,
     n_tokens_expr,
 )
@@ -26,28 +27,78 @@ from ocr_project_spark.operators.extract import extract
 
 token = st.one_of(
     st.sampled_from(["the", "data", "<a>", "nav", "a", "x" * 12, "café", "1", ""]),
-    st.text(alphabet="ab <>\t\n©", max_size=8),
+    # \x0b \x1c \x85 \xa0 \u2028 \u3000: whitespace to str.split() but
+    # not to a plain Java \s
+    st.text(alphabet="ab <>\t\n©\x0b\x1c\x85\xa0\u2028\u3000", max_size=8),
 )
 texts = st.lists(token, max_size=30).map(" ".join)
 
 
 @settings(max_examples=60, deadline=None)
 @given(st.lists(texts, min_size=1, max_size=40))
+# blank texts of different whitespace (Jaccard's no-words branch) and a
+# span that only the Unicode-aware tokenizer gives 8 tokens
+@example(["\t", "\u3000 \x85", "one\x1ctwo three four five six seven eight"])
 def test_rules_match_spark_exprs(spark_batch_texts):
     # collect one Spark evaluation per hypothesis batch
     from ocr_project_spark.session import get_spark
 
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
-    df = s.createDataFrame([(t,) for t in spark_batch_texts], "text string")
+    # each text is also paired with its neighbour: a Jaccard pair, and a
+    # two-element array that the rule filters inside a lambda, as
+    # extract.assemble_expr runs it
+    pairs = list(
+        zip(spark_batch_texts, spark_batch_texts[1:] + spark_batch_texts[:1])
+    )
+    df = s.createDataFrame(
+        [(t, o, [t, o]) for t, o in pairs],
+        "text string, other string, both array<string>",
+    )
     got = df.select(
         n_tokens_expr(F.col("text")).alias("n"),
         F.round(link_density_expr(F.col("text")), 9).alias("ld"),
         is_content_expr(F.col("text")).alias("c"),
+        F.round(jaccard_expr(F.col("text"), F.col("other")), 9).alias("j"),
+        F.filter("both", is_content_expr).alias("kept"),
     ).collect()
-    for t, r in zip(spark_batch_texts, got):
+    for (t, o), r in zip(pairs, got):
         assert r["n"] == rules.n_tokens(t), t
         assert abs(r["ld"] - rules.link_density(t)) < 1e-9, t
         assert r["c"] == rules.is_content(t), t
+        assert abs(r["j"] - rules.jaccard_words(t, o)) < 1e-9, (t, o)
+        assert r["kept"] == [x for x in (t, o) if rules.is_content(x)], (t, o)
+
+
+def test_is_content_tokenizes_once(spark):
+    """HOF lambdas are interpreted without common-subexpression
+    elimination, so the classifier must split each text exactly once."""
+    df = spark.createDataFrame([("x",)], "text string")
+    plan = df.select(is_content_expr(F.col("text")).alias("c"))._jdf
+    analyzed = plan.queryExecution().analyzed().toString()
+    assert analyzed.count("split(") == 1, analyzed
+
+
+def test_unicode_separator_span_matches_oracle(spark):
+    r"""\x1c is whitespace to str.split() (8 tokens, content) but not to a
+    plain Java \s (7 tokens); extract() must keep the span like the oracle."""
+    from ocr_project_spark import oracle, schema
+
+    doc = dict(
+        doc_id="sep",
+        spans=[
+            dict(kind="text", text="one\x1ctwo three four five six seven eight",
+                 media_ref=None, offset=0),
+        ],
+    )
+    docs = spark.createDataFrame(
+        [(doc["doc_id"], [tuple(sp.values()) for sp in doc["spans"]])],
+        schema.DOCUMENTS_SPANS,
+    )
+    cands = spark.createDataFrame([], schema.MEDIA_CANDIDATES)
+    (row,) = extract(docs, cands).collect()
+    want = oracle.extract_document(doc)["spans"]
+    assert len(want) == 1
+    assert [s.asDict() for s in row["spans"]] == want
 
 
 def _extract_dict(docs_df, cands_df):
