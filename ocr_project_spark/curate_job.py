@@ -60,6 +60,39 @@ def _write_text_file(spark, path: str, content: str) -> None:
         out.close()
 
 
+def cut_lineage(df, resident: list):
+    """Materialize ``df`` once and return a frame whose plan starts at
+    the materialized rows: an eager local checkpoint, filled by ONE
+    action, so every observe() node upstream fires exactly once and
+    every later stage plans from a small leaf instead of re-analyzing
+    the whole ladder (the plan text otherwise grows to 10^8 characters
+    on a ten-stage ladder).  The cuts in ``resident`` are released once
+    this one is filled -- the new cut is the only way later stages reach
+    them -- so at most two are ever resident; ``df`` is appended.
+
+    The trade against a cache: checkpoint blocks cannot be recomputed.
+    Losing an executor that holds them fails the job loudly (a rerun
+    with the same --run-id converges) where a cache would recompute.
+    The leaf also reports the source plan's *estimated* size, not the
+    materialized one, so small joins downstream of a cut are broadcast
+    only at runtime by AQE, not at planning time.
+    MEMORY_AND_DISK: a stage bigger than storage memory spills."""
+    from pyspark import StorageLevel
+
+    df = df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    release_cuts(resident)
+    resident.append(df)
+    return df
+
+
+def release_cuts(resident: list, blocking: bool = False) -> None:
+    """Drop the blocks of every cut in ``resident`` (emptied).
+    ``DataFrame.unpersist()`` is a no-op on a checkpointed frame: the
+    blocks belong to the RDD under its LogicalRDD leaf."""
+    while resident:
+        resident.pop()._jdf.queryExecution().analyzed().rdd().unpersist(blocking)
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True, help="(doc_id, text) parquet")
@@ -71,8 +104,8 @@ def build_parser() -> argparse.ArgumentParser:
         "Use when the input parquet carries fewer row groups than the "
         "cluster has cores: row groups are the atomic scan-split unit, "
         "so a low-row-group file caps scan parallelism no matter what "
-        "maxPartitionBytes says, and the ladder's per-stage persist "
-        "freezes that cap into EVERY stage (measured: a 5-row-group "
+        "maxPartitionBytes says, and the ladder's per-stage lineage "
+        "cuts freeze that cap into EVERY stage (measured: a 5-row-group "
         "500k-doc input ran the whole ladder ~serial on a 32-core "
         "cluster — BASELINE.md, curation-ladder scaling). Costs one "
         "up-front shuffle of the raw corpus; prefer fixing the "
@@ -82,22 +115,25 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--parallelism", type=int, default=None)
     p.add_argument(
         "--funnel", choices=("persist", "observe"), default="persist",
-        help="funnel accounting mode. 'persist' (default) materializes "
-        "every stage (persist + count action): each stage's cost is "
-        "attributable in isolation and at most two stages are resident, "
-        "but the whole corpus streams through the cache once PER stage. "
-        "'observe' fuses the ladder into one write action and rides the "
-        "per-stage (docs, tokens) counts on df.observe() metrics — the "
-        "corpus streams ONCE, and only stages whose construction fans "
-        "out over their input (gopher/scrub-passages/lm/dsir/bpe/shards "
+        help="funnel accounting mode. Both modes count each stage's "
+        "(docs, tokens) with df.observe() metrics and materialize with "
+        "eager local checkpoints (lineage cuts, at most two resident), "
+        "so no stage re-plans the ladder above it. 'persist' (default) "
+        "cuts after EVERY stage: each stage's cost is attributable in "
+        "isolation (stage_wall_s), but the whole corpus is materialized "
+        "once PER stage. 'observe' fuses the ladder into one write "
+        "action and cuts only the input of stages whose construction "
+        "fans out over it (gopher/scrub-passages/lm/dsir/bpe/shards "
         "build a model or key set from the same rows they then filter) "
-        "persist that input — filled EAGERLY, which is load-bearing "
-        "(a lazily-shared cache double-fires upstream observations; "
-        "see fanout_input).  At "
-        "10^12-doc scale 'observe' is the production mode: per-stage "
-        "materialization multiplies corpus I/O by the ladder depth, "
-        "which a memory-bandwidth-bound host cannot hide (BASELINE.md, "
-        "curation-ladder scaling); funnel.json is identical either way.",
+        "-- the corpus streams ONCE.  At 10^12-doc scale 'observe' is "
+        "the production mode: per-stage materialization multiplies "
+        "corpus I/O by the ladder depth, which a memory-bandwidth-bound "
+        "host cannot hide (BASELINE.md, curation-ladder scaling); "
+        "funnel.json is identical either way.  A cut is not a cache: "
+        "its blocks cannot be recomputed, so losing an executor that "
+        "holds one fails the run (rerun with the same --run-id; on "
+        "dynamic allocation, spark.dynamicAllocation."
+        "cachedExecutorIdleTimeout keeps such executors alive).",
     )
     p.add_argument(
         "--cap-per-source", type=int, default=None, metavar="N",
@@ -195,7 +231,7 @@ def main(argv: list[str] | None = None) -> int:
     import time as _time
 
     funnel: list[dict] = []
-    _live: list = []  # persisted frames pending release
+    _cuts: list = []  # resident lineage cuts (at most two)
     _observed: list = []  # (stage, Observation) in ladder order
     _stage_wall: dict[str, float] = {}  # persist mode: per-stage action wall
     _t_start = _time.monotonic()
@@ -207,233 +243,211 @@ def main(argv: list[str] | None = None) -> int:
         )
 
     def record(df, stage):
+        # attach a named metrics node: whichever action first streams
+        # the rows past it fires it, exactly once.  Counts are read
+        # after the write, in ladder order.
+        from pyspark.sql import Observation
+
+        obs = Observation(f"funnel_{stage}")
+        df = df.observe(obs, *_counts())
+        _observed.append((stage, obs))
         if args.funnel == "observe":
-            # no action, no cache: attach a named metrics node and let
-            # the final write action stream the rows past it exactly
-            # once.  Counts resolve after the write (order preserved).
-            from pyspark.sql import Observation
-
-            obs = Observation(f"funnel_{stage}")
-            df = df.observe(obs, *_counts())
-            _observed.append((stage, obs))
             return df
-        # persist BEFORE counting: the funnel action materializes the
-        # stage once and the next stage reads the cache instead of
-        # re-executing the whole upstream lineage per stage (O(stages²)
-        # scans otherwise); the previous stage's cache is released as
-        # soon as its successor is materialized, so at most two stages
-        # are ever resident.  MEMORY_AND_DISK: a stage bigger than the
-        # cluster's storage memory spills instead of failing.
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        t0 = _time.monotonic()
-        row = df.agg(*_counts()).collect()[0]
-        # the count action materializes the stage, so its wall IS the
-        # stage's incremental cost — a per-stage attribution observe
+        # persist mode: cut here, so the stage's one eager action
+        # fills the cut and fires the observation, and its wall IS the
+        # stage's incremental cost -- a per-stage attribution observe
         # mode cannot give (stages fuse into one action by design)
+        t0 = _time.monotonic()
+        df = cut_lineage(df, _cuts)
         _stage_wall[stage] = round(_time.monotonic() - t0, 3)
-        funnel.append(
-            {"stage": stage, "n_docs": int(row["d"]), "n_tokens": int(row["t"])}
-        )
-        while _live:
-            _live.pop().unpersist()
-        _live.append(df)
         return df
 
     def fanout_input(df):
-        # observe mode only: a stage that consumes its input in more
-        # than one subtree (model build / key-set election + the join
-        # back onto the same rows) would re-execute the entire fused
-        # upstream lineage once per subtree.  Persist the input and
-        # fill the cache EAGERLY (count()): if the fill were left to
+        # observe mode only (persist mode cut at the last record()): a
+        # stage that consumes its input in more than one subtree (model
+        # build / key-set election + the join back onto the same rows)
+        # would re-execute the entire fused upstream lineage once per
+        # subtree.  Cut the lineage EAGERLY: if the fill were left to
         # the final write action, the two consuming subtrees are
         # independent shuffle-map stages that the scheduler runs
-        # CONCURRENTLY, both compute the same uncached partitions, and
-        # every observe() node above the cache double-fires (measured
-        # on the standalone cluster: 00_input counted 656k docs of a
-        # 500k corpus).  The eager fill is one deterministic pass that
-        # fires each upstream observation exactly once; both subtrees
-        # then read the warm cache.  MEMORY_AND_DISK so eviction can't
-        # reopen the race.  Resident until the write completes.
+        # CONCURRENTLY, both compute the same unmaterialized partitions,
+        # and every observe() node above double-fires (measured on the
+        # standalone cluster: 00_input counted 656k docs of a 500k
+        # corpus).  The eager fill is one deterministic pass that fires
+        # each upstream observation exactly once; both subtrees then
+        # read the cut.  Not a reliable checkpoint(): it runs the plan
+        # twice (count, then file write) and double-fires the same way.
         if args.funnel != "observe":
             return df
-        from pyspark import StorageLevel
+        return cut_lineage(df, _cuts)
 
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        # once THIS cache is filled, the write's lineage reaches every
-        # earlier fan-out cache only through it, so earlier caches are
-        # never read again — release them now to match the persist
-        # ladder's at-most-two-resident policy instead of accumulating
-        # one near-corpus-size cache per fan-out stage until the write
-        while _live:
-            _live.pop().unpersist()
-        _live.append(df)
-        return df
+    from ocr_project_spark import caching
 
-    cur = spark.read.parquet(args.input).select("doc_id", "text")
-    if args.repartition_input is not None:
-        # before record(): the persist freezes partitioning for the
-        # whole ladder, so the repair must precede the first cache
-        cur = cur.repartition(args.repartition_input)
-    cur = record(cur, "00_input")
+    try:
+        cur = spark.read.parquet(args.input).select("doc_id", "text")
+        if args.repartition_input is not None:
+            # before record(): a lineage cut freezes partitioning for the
+            # whole ladder, so the repair must precede the first cut
+            cur = cur.repartition(args.repartition_input)
+        cur = record(cur, "00_input")
 
-    if args.cap_per_source is not None:
-        from ocr_project_spark.operators.curate import cap_per_source
+        if args.cap_per_source is not None:
+            from ocr_project_spark.operators.curate import cap_per_source
 
-        # cap first: over-representation shaping shrinks every later
-        # stage; semi-join keeps the ladder's (doc_id, text) shape
-        # without threading the source column through the stages
-        keys = cap_per_source(
-            spark.read.parquet(args.input).select("doc_id", "source"),
-            cap=args.cap_per_source,
-            salt=args.run_id,
-        ).select("doc_id")
-        cur = cur.join(keys, "doc_id", "left_semi")
-        cur = record(cur, "05_source_cap")
+            # cap first: over-representation shaping shrinks every later
+            # stage; semi-join keeps the ladder's (doc_id, text) shape
+            # without threading the source column through the stages
+            keys = cap_per_source(
+                spark.read.parquet(args.input).select("doc_id", "source"),
+                cap=args.cap_per_source,
+                salt=args.run_id,
+            ).select("doc_id")
+            cur = cur.join(keys, "doc_id", "left_semi")
+            cur = record(cur, "05_source_cap")
 
-    if args.clean_lines:
-        from ocr_project_spark.operators.curate import clean_lines
+        if args.clean_lines:
+            from ocr_project_spark.operators.curate import clean_lines
 
-        cur = (
-            clean_lines(cur)
-            .where("keep")
-            .select("doc_id", F.col("clean_text").alias("text"))
-        )
-        cur = record(cur, "10_clean_lines")
+            cur = (
+                clean_lines(cur)
+                .where("keep")
+                .select("doc_id", F.col("clean_text").alias("text"))
+            )
+            cur = record(cur, "10_clean_lines")
 
-    if args.gopher:
-        from ocr_project_spark.operators.curate import gopher_rules
+        if args.gopher:
+            from ocr_project_spark.operators.curate import gopher_rules
 
-        cur = fanout_input(cur)
-        keep = gopher_rules(cur, **gk).where("keep").select("doc_id")
-        cur = cur.join(keep, "doc_id")
-        cur = record(cur, "20_gopher")
+            cur = fanout_input(cur)
+            keep = gopher_rules(cur, **gk).where("keep").select("doc_id")
+            cur = cur.join(keep, "doc_id")
+            cur = record(cur, "20_gopher")
 
-    if args.scrub_pii:
-        from ocr_project_spark.operators.curate import scrub_pii
+        if args.scrub_pii:
+            from ocr_project_spark.operators.curate import scrub_pii
 
-        cur = scrub_pii(cur).select("doc_id", F.col("clean_text").alias("text"))
-        cur = record(cur, "30_scrub_pii")
+            cur = scrub_pii(cur).select("doc_id", F.col("clean_text").alias("text"))
+            cur = record(cur, "30_scrub_pii")
 
-    if args.scrub_passages is not None:
-        from ocr_project_spark.operators.dedup import scrub_passages
+        if args.scrub_passages is not None:
+            from ocr_project_spark.operators.dedup import scrub_passages
 
-        # scrub consumes its input twice: the window-hash cache build
-        # and the rebuild join both derive from the tokenized input
-        cur = fanout_input(cur)
-        cur = scrub_passages(
-            cur,
-            n=args.scrub_passages,
-            broadcast_artifacts=args.scrub_broadcast,
-        ).select("doc_id", F.col("clean_text").alias("text"))
-        cur = record(cur, "40_scrub_passages")
+            # scrub consumes its input twice: the window-hash cache build
+            # and the rebuild join both derive from the tokenized input
+            cur = fanout_input(cur)
+            cur = scrub_passages(
+                cur,
+                n=args.scrub_passages,
+                broadcast_artifacts=args.scrub_broadcast,
+            ).select("doc_id", F.col("clean_text").alias("text"))
+            cur = record(cur, "40_scrub_passages")
 
-    if args.exact_dedup:
-        from pyspark.sql import Window
+        if args.exact_dedup:
+            from pyspark.sql import Window
 
-        from ocr_project_spark.operators.dedup import normalized_text
+            from ocr_project_spark.operators.dedup import normalized_text
 
-        # window-rank form of exact_dedup's keeper election: ONE
-        # exchange on the text hash and no join back onto the corpus
-        # (the groupBy+join form scans the stage twice and plans a
-        # second exchange).  For unique doc_ids this is exactly the
-        # old join-on-keeper_id survivor set: the min-non-null-id row
-        # per identical normalized text survives, null-id rows never
-        # do (min() skips nulls; an equi-join on doc_id drops them).
-        # For DUPLICATE doc_id rows the forms diverge — the join kept
-        # every row carrying the keeper id (including distinct texts
-        # under one id), the window keeps exactly one row per distinct
-        # normalized text — which is the semantics "exact dedup"
-        # actually promises; the operator-level exact_dedup() keeps
-        # the (keeper_id, n_copies) accounting contract for callers
-        # that need it.
-        w = Window.partitionBy("_th").orderBy(F.asc_nulls_last("doc_id"))
-        cur = (
-            cur.withColumn("_th", F.md5(normalized_text(F.col("text"))))
-            .withColumn("_rn", F.row_number().over(w))
-            .where((F.col("_rn") == 1) & F.col("doc_id").isNotNull())
-            .drop("_rn", "_th")
-        )
-        cur = record(cur, "50_exact_dedup")
+            # window-rank form of exact_dedup's keeper election: ONE
+            # exchange on the text hash and no join back onto the corpus
+            # (the groupBy+join form scans the stage twice and plans a
+            # second exchange).  For unique doc_ids this is exactly the
+            # old join-on-keeper_id survivor set: the min-non-null-id row
+            # per identical normalized text survives, null-id rows never
+            # do (min() skips nulls; an equi-join on doc_id drops them).
+            # For DUPLICATE doc_id rows the forms diverge — the join kept
+            # every row carrying the keeper id (including distinct texts
+            # under one id), the window keeps exactly one row per distinct
+            # normalized text — which is the semantics "exact dedup"
+            # actually promises; the operator-level exact_dedup() keeps
+            # the (keeper_id, n_copies) accounting contract for callers
+            # that need it.
+            w = Window.partitionBy("_th").orderBy(F.asc_nulls_last("doc_id"))
+            cur = (
+                cur.withColumn("_th", F.md5(normalized_text(F.col("text"))))
+                .withColumn("_rn", F.row_number().over(w))
+                .where((F.col("_rn") == 1) & F.col("doc_id").isNotNull())
+                .drop("_rn", "_th")
+            )
+            cur = record(cur, "50_exact_dedup")
 
-    if args.lm_cutoffs is not None:
-        from ocr_project_spark.operators.curate import lm_score
+        if args.lm_cutoffs is not None:
+            from ocr_project_spark.operators.curate import lm_score
 
-        cur = fanout_input(cur)
-        bands = lm_score(cur, cutoffs=(t1, t2)).where(
-            F.col("band").isin(keep_bands)
-        ).select("doc_id")
-        # left_semi keeps <2-token docs OUT (they have no LM row) —
-        # deliberate: unscoreable fragments fail a perplexity filter
-        cur = cur.join(bands, "doc_id", "left_semi")
-        cur = record(cur, "60_lm_filter")
+            cur = fanout_input(cur)
+            bands = lm_score(cur, cutoffs=(t1, t2)).where(
+                F.col("band").isin(keep_bands)
+            ).select("doc_id")
+            # left_semi keeps <2-token docs OUT (they have no LM row) —
+            # deliberate: unscoreable fragments fail a perplexity filter
+            cur = cur.join(bands, "doc_id", "left_semi")
+            cur = record(cur, "60_lm_filter")
 
-    if args.dsir_target is not None:
-        from ocr_project_spark.operators.curate import dsir_sample
+        if args.dsir_target is not None:
+            from ocr_project_spark.operators.curate import dsir_sample
 
-        cur = fanout_input(cur)
-        target = spark.read.parquet(args.dsir_target).select("doc_id", "text")
-        sel = dsir_sample(
-            cur, target, args.dsir_n, seed=args.run_id
-        ).select("doc_id")
-        cur = cur.join(sel, "doc_id", "left_semi")
-        cur = record(cur, "70_dsir_select")
+            cur = fanout_input(cur)
+            target = spark.read.parquet(args.dsir_target).select("doc_id", "text")
+            sel = dsir_sample(
+                cur, target, args.dsir_n, seed=args.run_id
+            ).select("doc_id")
+            cur = cur.join(sel, "doc_id", "left_semi")
+            cur = record(cur, "70_dsir_select")
 
-    extra_cols = []
-    if args.bpe_merges is not None:
-        from ocr_project_spark.functions.bpe import apply_bpe, learn_bpe
-        from ocr_project_spark.operators.pack import pack_sequences
+        extra_cols = []
+        if args.bpe_merges is not None:
+            from ocr_project_spark.functions.bpe import apply_bpe, learn_bpe
+            from ocr_project_spark.operators.pack import pack_sequences
 
-        # learn_bpe is an action (driver-side merge training): in
-        # observe mode its sample scan is the first consumer of the
-        # guarded cache, so the fused upstream executes once here and
-        # the final write reads the cache
-        cur = fanout_input(cur)
-        merges = learn_bpe(cur, n_merges=args.bpe_merges)
-        counts = apply_bpe(cur, merges)
-        packed = pack_sequences(
-            counts.select("doc_id", "n_bpe_tokens"),
-            budget=args.pack_budget,
-            tokens_col="n_bpe_tokens",
-        ).withColumnRenamed("n_tokens", "n_bpe_tokens")
-        cur = cur.join(packed, "doc_id")
-        extra_cols += ["n_bpe_tokens", "pack_id"]
+            # learn_bpe is an action (driver-side merge training): in
+            # observe mode its sample scan is the first consumer of the
+            # guarded cache, so the fused upstream executes once here and
+            # the final write reads the cache
+            cur = fanout_input(cur)
+            merges = learn_bpe(cur, n_merges=args.bpe_merges)
+            counts = apply_bpe(cur, merges)
+            packed = pack_sequences(
+                counts.select("doc_id", "n_bpe_tokens"),
+                budget=args.pack_budget,
+                tokens_col="n_bpe_tokens",
+            ).withColumnRenamed("n_tokens", "n_bpe_tokens")
+            cur = cur.join(packed, "doc_id")
+            extra_cols += ["n_bpe_tokens", "pack_id"]
 
-    if args.shards is not None:
-        from ocr_project_spark.operators.curate import shuffle_shards
+        if args.shards is not None:
+            from ocr_project_spark.operators.curate import shuffle_shards
 
-        cur = fanout_input(cur)
-        sh = shuffle_shards(
-            cur.select("doc_id"), n_shards=args.shards, salt=args.shard_salt
-        )
-        cur = cur.join(sh, "doc_id")
-        extra_cols += ["shard", "pos"]
+            cur = fanout_input(cur)
+            sh = shuffle_shards(
+                cur.select("doc_id"), n_shards=args.shards, salt=args.shard_salt
+            )
+            cur = cur.join(sh, "doc_id")
+            extra_cols += ["shard", "pos"]
 
-    # posixpath-style join, not os.path.join: the output root may be a
-    # remote URI and these paths are consumed by Spark/Hadoop, which
-    # use '/' on every platform
-    out_dir = f"{args.output.rstrip('/')}/{args.run_id}"
-    corpus_path = f"{out_dir}/corpus.parquet"
-    cur.select("doc_id", "text", *extra_cols).write.mode(
-        "overwrite"
-    ).parquet(corpus_path)
-    if args.funnel == "observe":
-        # the write action just streamed every stage; harvest the
-        # observed per-stage counts (ladder order) before the
-        # write-validation count below
+        # posixpath-style join, not os.path.join: the output root may be a
+        # remote URI and these paths are consumed by Spark/Hadoop, which
+        # use '/' on every platform
+        out_dir = f"{args.output.rstrip('/')}/{args.run_id}"
+        corpus_path = f"{out_dir}/corpus.parquet"
+        cur.select("doc_id", "text", *extra_cols).write.mode(
+            "overwrite"
+        ).parquet(corpus_path)
+        # every stage has fired by now (at its cut or in the write):
+        # harvest the per-stage counts in ladder order
         for stage, obs in _observed:
             m = obs.get
             funnel.append(
                 {"stage": stage, "n_docs": int(m["d"]), "n_tokens": int(m["t"])}
             )
-    row = spark.read.parquet(corpus_path).agg(*_counts()).collect()[0]
-    funnel.append(
-        {"stage": "90_written", "n_docs": int(row["d"]), "n_tokens": int(row["t"])}
-    )
-    while _live:
-        _live.pop().unpersist()
+        row = spark.read.parquet(corpus_path).agg(*_counts()).collect()[0]
+        funnel.append(
+            {"stage": "90_written", "n_docs": int(row["d"]), "n_tokens": int(row["t"])}
+        )
+    finally:
+        # the written corpus is the only result: drop the cuts and
+        # every tracked operator cache (the stages register theirs
+        # with the caching module), also when a stage failed
+        release_cuts(_cuts)
+        caching.release_all()
 
     # throughput/lineage metrics alongside the funnel (the `funnel`
     # key stays byte-identical across --funnel modes; timings live in

@@ -202,7 +202,7 @@ def test_funnel_report_metrics(tmp_path):
 
 def test_repartition_input_repairs_low_parallelism(spark, tmp_path):
     """--repartition-input N must (a) actually widen the partitioning
-    the ladder's first persist freezes — the single-file sf0.001
+    the ladder's first lineage cut freezes — the single-file sf0.001
     fixture scans as 1 task without it — and (b) leave the output row
     set identical to the unrepartitioned run (repartition is a
     row-preserving shuffle)."""
@@ -256,3 +256,144 @@ def test_repartition_input_repairs_low_parallelism(spark, tmp_path):
             ]
         )
         assert n_files == want, (tag, n_files)
+
+
+# the fan-out ladder of test_observe_funnel_matches_persist: every
+# stage kind, DSIR included -- the deepest plan the ladder can build
+FANOUT_ARGV = [
+    "--input", "/root/testdata/sf0.001/documents.parquet",
+    "--cap-per-source", "20",
+    "--gopher", "--gopher-set", "min_stopwords=1",
+    "--gopher-set", "min_words=25",
+    "--scrub-passages", "5",
+    "--exact-dedup",
+    "--lm-cutoffs", "3.0,3.6", "--lm-keep", "head,middle",
+    "--dsir-target", "/root/testdata/sf0.001/documents.parquet",
+    "--dsir-n", "100",
+    "--shards", "4",
+]
+# a cheaper persist-mode ladder: four cuts (00/20/30/50) and a shard join
+SHORT_ARGV = [
+    "--input", "/root/testdata/sf0.001/documents.parquet",
+    "--gopher", "--gopher-set", "min_stopwords=1",
+    "--gopher-set", "min_words=25",
+    "--scrub-pii", "--exact-dedup", "--shards", "4",
+]
+
+
+def _sql_executions_since(spark, mark: int) -> list:
+    """SQL executions with an id above ``mark``, from the in-process
+    status store.  Ids, not store offsets: the store evicts its oldest
+    executions past spark.sql.ui.retainedExecutions, which a long test
+    session reaches."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = int(store.executionsCount())
+    k = min(n, 200)
+    if k == 0:
+        return []
+    tail = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        store.executionsList(n - k, k)
+    )
+    return [
+        e for e in (tail.get(i) for i in range(tail.size()))
+        if e.executionId() > mark
+    ]
+
+
+def _last_job_id(spark) -> int:
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+def _cached_rdd_ids(spark) -> set:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_ladder_plans_stay_bounded(spark, tmp_path):
+    """Every stage plans from a lineage cut, not from the whole ladder:
+    no SQL execution of the fan-out ladder carries a physical plan over
+    100k characters (the uncut ladder's final write reached 93.5M in
+    observe mode and 177M in persist mode), and the cuts add no Spark
+    job over the uncut ladder (59 observe, 65 persist)."""
+    from ocr_project_spark.curate_job import main
+
+    max_jobs = {"persist": 65, "observe": 59}
+    for mode in ("persist", "observe"):
+        execs = _sql_executions_since(spark, -1)
+        mark = execs[-1].executionId() if execs else -1
+        job_mark = _last_job_id(spark)
+        rc = main(
+            FANOUT_ARGV
+            + ["--run-id", "b", "--output", str(tmp_path / mode), "--funnel", mode]
+        )
+        assert rc == 0
+        execs = _sql_executions_since(spark, mark)
+        assert execs, mode
+        plan_chars = max(len(e.physicalPlanDescription()) for e in execs)
+        assert plan_chars < 100_000, (mode, plan_chars)
+        n_jobs = _last_job_id(spark) - job_mark
+        assert 0 < n_jobs <= max_jobs[mode], (mode, n_jobs)
+
+
+def test_cuts_released_at_most_two_resident(spark, tmp_path, monkeypatch):
+    """DataFrame.unpersist() is a no-op on a checkpointed frame, so the
+    ladder releases each cut through its RDD: at most two cuts are ever
+    resident, and after main() returns no block of the run is left."""
+    from ocr_project_spark import curate_job
+
+    real_cut = curate_job.cut_lineage
+    cut_ids: list[int] = []
+    resident_before: list[int] = []
+
+    def spy(df, resident):
+        # the new cut is filled before earlier ones are released, so
+        # the peak is whatever was resident before the call plus one
+        resident_before.append(len(_cached_rdd_ids(spark) & set(cut_ids)))
+        out = real_cut(df, resident)
+        cut_ids.append(out._jdf.queryExecution().analyzed().rdd().id())
+        return out
+
+    monkeypatch.setattr(curate_job, "cut_lineage", spy)
+    before = _cached_rdd_ids(spark)
+    rc = curate_job.main(SHORT_ARGV + ["--run-id", "k", "--output", str(tmp_path)])
+    assert rc == 0
+    assert len(cut_ids) == 4
+    assert max(resident_before) <= 1, resident_before
+    assert _cached_rdd_ids(spark) <= before
+
+
+def test_lost_cut_fails_loudly_and_rerun_converges(spark, tmp_path, monkeypatch):
+    """A cut's blocks cannot be recomputed: a run that loses one
+    mid-ladder (blocks dropped, as when the executor holding them dies)
+    raises instead of silently re-running or short-counting the
+    lineage, writes no funnel and leaves no block behind; a rerun with
+    the same --run-id and --output converges to the clean run's funnel,
+    byte for byte, and the same corpus rows."""
+    from ocr_project_spark import curate_job
+
+    argv = SHORT_ARGV + ["--run-id", "rr", "--output", str(tmp_path)]
+    funnel_path = os.path.join(str(tmp_path), "rr", "funnel.json")
+    corpus_path = os.path.join(str(tmp_path), "rr", "corpus.parquet")
+
+    def run() -> tuple[str, list]:
+        assert curate_job.main(argv) == 0
+        funnel = json.load(open(funnel_path))["funnel"]
+        return json.dumps(funnel), sorted(spark.read.parquet(corpus_path).collect())
+
+    clean = run()
+    os.remove(funnel_path)
+
+    real_cut = curate_job.cut_lineage
+
+    def lose_blocks(df, resident):
+        curate_job.release_cuts(resident, blocking=True)
+        return real_cut(df, resident)
+
+    monkeypatch.setattr(curate_job, "cut_lineage", lose_blocks)
+    before = _cached_rdd_ids(spark)
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        curate_job.main(argv)
+    assert not os.path.exists(funnel_path)
+    assert _cached_rdd_ids(spark) <= before
+    monkeypatch.setattr(curate_job, "cut_lineage", real_cut)
+
+    assert run() == clean
