@@ -1,13 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)  — flagship extraction on sf0.001.
-queries()     — 50 callables covering the implemented operators
-                (SURVEY.md §2), implemented in
-                ocr_project_spark/harness.py; every entry has an
-                oracle.  Near-duplicate demos (engine-path variants,
-                standalone forms of merged queries, by-design-no-oracle
-                queries) live in harness.LOCAL_QUERIES and stay
-                verified by tools/compare_oracle.py + pytest.
+queries()     — the 50 driver records of harness.QUERIES, in registry
+                order: callables covering the implemented operators
+                (SURVEY.md §2); every one has an oracle.  The other
+                records (standalone forms of driver rows, queries with
+                no SQL oracle by design) stay verified by
+                tools/compare_oracle.py + pytest.
 oracle_sql()  — matching DuckDB SQL strings (one per query).
 """
 
@@ -32,8 +31,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return dict(harness.SPARK_QUERIES)
+    return {n: q.build for n, q in harness.QUERIES.items() if q.driver}
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(harness.ORACLE_SQL)
+    return {n: q.oracle for n, q in harness.QUERIES.items() if q.driver}

@@ -31,7 +31,6 @@ BENCH_QUERIES = [
     "session_stats",
     "top1_per_group",
     "weighted_confidence",
-    "region_revenue",
     "exact_dedup",
     "dedup_then_extract",
     "curate_corpus",
@@ -117,7 +116,7 @@ def main() -> None:
     from ocr_project_spark import caching
 
     for name in BENCH_QUERIES:
-        fn = harness.SPARK_QUERIES.get(name) or harness.LOCAL_QUERIES[name]
+        fn = harness.QUERIES[name].build
         best = float("inf")
         for _ in range(3):
             t0 = time.perf_counter()

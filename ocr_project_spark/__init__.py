@@ -28,7 +28,6 @@ def extract_documents(
     spark=None,
     normalize: str | None = None,
     measure_improvement: bool = False,
-    early_termination: float | None = None,
 ):
     """One-call extraction — the engine's analog of the reference's
     ``extract_text(path)`` convenience (reference __init__.py:55-64),
@@ -39,7 +38,6 @@ def extract_documents(
     * ``normalize``: K4-K6 tier or 'auto' (per-doc quality routing).
     * ``measure_improvement``: add the K7 q_before/q_after/q_delta
       lineage column (requires a tier).
-    * ``early_termination``: fusion confidence short-circuit threshold.
     """
     from pyspark.sql import DataFrame
 
@@ -55,7 +53,7 @@ def extract_documents(
     if normalize is None and not measure_improvement:
         from ocr_project_spark.operators.extract import extract
 
-        return extract(docs, candidates, early_termination=early_termination)
+        return extract(docs, candidates)
     from ocr_project_spark.pipeline import run_pipeline
 
     return run_pipeline(
@@ -63,5 +61,4 @@ def extract_documents(
         candidates,
         normalize=normalize,
         measure_improvement=measure_improvement,
-        early_termination=early_termination,
     )

@@ -25,8 +25,6 @@ from typing import Any
 ENGINE_DEFAULTS: dict[str, Any] = {
     "extract": {
         "normalize": None,            # K4-K6 tier or "auto"
-        "measure_improvement": False, # K7 lineage column
-        "early_termination": None,    # fusion confidence short-circuit
         "retry_threshold": 0.3,       # PSM-retry gate (fuse_with_retry)
         "chunk_mega_docs": False,
         "mega_span_threshold": 256,   # salt threshold (task balance)
@@ -35,7 +33,6 @@ ENGINE_DEFAULTS: dict[str, Any] = {
     "partitioning": {
         "n_buckets": 64,
         "bucket_batch_size": 8,
-        "salt_buckets": 8,
     },
     "classifiers": {
         "density": {"enabled": True},

@@ -1,16 +1,19 @@
 """Driver-contract query catalog: Spark implementation + DuckDB oracle
 for every SQL-expressible operator from SURVEY.md section 2.
 
-Each entry in SPARK_QUERIES is ``(spark, sf_dir) -> DataFrame``; the
-matching ORACLE_SQL string is ANSI/DuckDB SQL over the driver's
-pre-registered views (region nation customer supplier part orders
-lineitem events documents embeddings).  Column names and types are
+Each ``QUERIES`` record pairs a ``(spark, sf_dir) -> DataFrame`` builder
+with its oracle: ANSI/DuckDB SQL over the driver's pre-registered views
+(region nation customer supplier part orders lineitem events documents
+embeddings).  Column names and types are
 aligned pairwise; float outputs are rounded to 4 decimals on both
 sides so IEEE accumulation-order differences cannot flip the driver's
 value hash.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -714,7 +717,7 @@ def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 reading-order row_number + W4 prev-gap classification in one
     window pass (merged from the former separate gap_class query so
     both operators fit the driver's query-count cap; the standalone
-    form remains locally oracle-checked via LOCAL_QUERIES)."""
+    form remains locally oracle-checked as a non-driver record)."""
     ev = T(spark, sf_dir, "events")
     from ocr_project_spark.operators.sessionize import epoch_seconds, gap_class
 
@@ -881,49 +884,8 @@ FROM lineitem GROUP BY l_partkey
 
 
 # --------------------------------------------------------------------
-# 11-14. Joins & set ops (J1, J1b, U1, U2)
+# 11-13. Joins & set ops (J1b, U1, U2)
 # --------------------------------------------------------------------
-def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = T(spark, sf_dir, "lineitem")
-    sup = T(spark, sf_dir, "supplier")
-    nat = T(spark, sf_dir, "nation")
-    reg = T(spark, sf_dir, "region")
-    dims = F.broadcast(
-        sup.join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey).join(
-            F.broadcast(reg), nat.n_regionkey == reg.r_regionkey
-        )
-    )
-    j = li.join(dims, li.l_suppkey == dims.s_suppkey)
-    # Determinism: a double SUM over millions of rows is order-dependent
-    # in its last decimal digit once the accumulator passes ~1e12 (the
-    # sf3 gate flipped AFRICA by 0.01).  Sum exact integers instead:
-    # price is 2-decimal cents, discount is 2-decimal basis points, so
-    # cents * (100 - bp) is the exact revenue in 1e-4 dollars; one final
-    # int->double division is identical in both engines.
-    rev_e4 = (
-        F.round(F.col("l_extendedprice") * 100, 0).cast("long")
-        * (F.lit(100) - F.round(F.col("l_discount") * 100, 0).cast("long"))
-    )
-    return j.groupBy("r_name").agg(
-        (F.sum(rev_e4) / F.lit(10000.0)).alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-_SQL_REGION_REVENUE = """
-SELECT r_name,
-       CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-                * (100 - CAST(round(l_discount * 100, 0) AS BIGINT))) AS BIGINT)
-         / 10000.0 AS revenue,
-       count(*) AS n_lines
-FROM lineitem
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-GROUP BY r_name
-"""
-
-
 def q_left_join_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = T(spark, sf_dir, "customer")
     o = T(spark, sf_dir, "orders")
@@ -1448,7 +1410,7 @@ FROM t
 # token statistics in ONE scan (merged from the former lang_id /
 # fingerprint / token_stats driver queries so each keeps a driver
 # correctness row under the 50-query cap; the standalone forms remain
-# locally oracle-checked via LOCAL_QUERIES).  Same grain, same table —
+# locally oracle-checked as non-driver records).  Same grain, same table —
 # the merge costs nothing and saves two corpus scans.
 # --------------------------------------------------------------------
 def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1575,21 +1537,6 @@ _SQL_DISTINCT_TOKENS = """
 SELECT count(DISTINCT tok) AS n_distinct_tokens
 FROM (SELECT unnest({toks}) AS tok FROM documents)
 """.format(toks=_WORD_TOKS.format(c="text"))
-
-
-def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = T(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-        .select("o_orderkey", F.round("o_totalprice", 2).alias("total"))
-    )
-
-
-_SQL_TOPK_ORDERS = """
-SELECT o_orderkey, round(o_totalprice, 2) AS total
-FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
-"""
 
 
 # --------------------------------------------------------------------
@@ -3000,45 +2947,6 @@ FROM (SELECT lang, quantile_cont(n_chars, [0.5, 0.9, 0.99]) AS q
 
 
 # --------------------------------------------------------------------
-# 34. Bigram top-k (n-gram vocabulary analysis)
-# --------------------------------------------------------------------
-def q_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = T(spark, sf_dir, "documents")
-    toks = TX.word_tokens(F.col("text"))
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat(
-                F.element_at(toks, i + 1), F.lit(" "), F.element_at(toks, i + 2)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    # explode_outer + isNotNull: see _spans_out_flat (avoids the
-    # optimizer duplicating the bigram transform into a pushed filter)
-    return (
-        d.select(F.explode_outer(bigrams).alias("bigram"))
-        .where(F.col("bigram").isNotNull())
-        .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("bigram").asc())
-        .limit(20)
-    )
-
-
-_SQL_BIGRAM = """
-WITH t AS (SELECT {wd} AS toks FROM documents),
-b AS (
-  SELECT unnest(list_transform(generate_series(0, len(toks) - 2),
-                i -> toks[i + 1] || ' ' || toks[i + 2])) AS bigram
-  FROM t WHERE len(toks) >= 2
-)
-SELECT bigram, count(*) AS n FROM b GROUP BY 1
-ORDER BY n DESC, bigram LIMIT 20
-""".format(wd=_WORD_TOKS.format(c="text"))
-
-
-# --------------------------------------------------------------------
 # 35. Hourly rollup over events (tumbling-window batch analog of the
 #     streaming aggregation; Structured Streaming runs the same plan)
 # --------------------------------------------------------------------
@@ -3096,51 +3004,6 @@ def q_span_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s.order").alias("ord"),
         )
     )
-
-
-# --------------------------------------------------------------------
-# 37. Salted two-phase aggregate == plain aggregate (skew policy proof
-#     in the driver gate; plans/partitioning.py)
-# --------------------------------------------------------------------
-def q_salted_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_project_spark.plans.partitioning import salted_two_phase_count
-
-    ev = T(spark, sf_dir, "events").select(F.col("user_id").cast("string").alias("k"))
-    return salted_two_phase_count(ev, "k")
-
-
-_SQL_SALTED_COUNTS = """
-SELECT CAST(user_id AS varchar) AS k, count(*) AS cnt FROM events GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------
-# 38. ROLLUP grouping sets (beyond-reference relational coverage)
-# --------------------------------------------------------------------
-def q_order_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = T(spark, sf_dir, "orders")
-    # Determinism: sum exact integer cents, not doubles — the grand-total
-    # rollup row sums 4.5M doubles past 1e12 where accumulation order
-    # flips the hundredths digit between engines (caught by the sf3 gate).
-    return (
-        o.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-                / F.lit(100.0)
-            ).alias("total"),
-        )
-    )
-
-
-_SQL_ORDER_ROLLUP = """
-SELECT o_orderstatus, o_orderpriority,
-       count(*) AS n_orders,
-       CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
-         / 100.0 AS total
-FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-"""
 
 
 # --------------------------------------------------------------------
@@ -3365,115 +3228,6 @@ def q_ivf_exhaustive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# 44. Anti join — customers with no orders (the resume anti-join shape
-#     of plans/checkpoint.py at relational level)
-# --------------------------------------------------------------------
-def q_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = T(spark, sf_dir, "customer")
-    o = T(spark, sf_dir, "orders").where(F.col("o_totalprice") > 300000)
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .select("c_custkey", "c_name")
-    )
-
-
-_SQL_ANTI = """
-SELECT c_custkey, c_name FROM customer
-WHERE c_custkey NOT IN (
-  SELECT o_custkey FROM orders
-  WHERE o_custkey IS NOT NULL AND o_totalprice > 300000)
-"""
-
-
-# --------------------------------------------------------------------
-# 45. Pivot — per-user event-type count matrix
-# --------------------------------------------------------------------
-def q_event_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = T(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .pivot("event_type", ["click", "view", "purchase", "signup", "error"])
-        .count()
-        .na.fill(0)
-    )
-
-
-_SQL_PIVOT = """
-SELECT user_id,
-       count(*) FILTER (event_type = 'click')    AS click,
-       count(*) FILTER (event_type = 'view')     AS view,
-       count(*) FILTER (event_type = 'purchase') AS purchase,
-       count(*) FILTER (event_type = 'signup')   AS signup,
-       count(*) FILTER (event_type = 'error')    AS error
-FROM events GROUP BY user_id
-"""
-
-
-# --------------------------------------------------------------------
-# 46. CUBE grouping sets over orders
-# --------------------------------------------------------------------
-def q_order_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = T(spark, sf_dir, "orders").where(F.col("o_orderkey") < 2000)
-    return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders")
-    )
-
-
-_SQL_CUBE = """
-SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders
-FROM orders WHERE o_orderkey < 2000
-GROUP BY CUBE (o_orderstatus, o_orderpriority)
-"""
-
-
-# --------------------------------------------------------------------
-# 47. Semi join — customers that DO have a high-value order (C13-adjacent
-#     join-type breadth; the dual of customers_no_orders)
-# --------------------------------------------------------------------
-def q_customers_with_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = T(spark, sf_dir, "customer")
-    o = T(spark, sf_dir, "orders").where(F.col("o_totalprice") > 300000)
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        .select("c_custkey", "c_name")
-    )
-
-
-_SQL_SEMI = """
-SELECT c_custkey, c_name FROM customer
-WHERE c_custkey IN (
-  SELECT o_custkey FROM orders WHERE o_totalprice > 300000)
-"""
-
-
-# --------------------------------------------------------------------
-# 47b. Semi + anti in ONE driver query (merged so both join types keep
-#      a driver correctness row under the 50-query cap; the standalone
-#      forms remain locally oracle-checked via LOCAL_QUERIES): every
-#      customer labeled by whether a high-value order exists.
-# --------------------------------------------------------------------
-def q_customer_order_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = T(spark, sf_dir, "customer")
-    o = T(spark, sf_dir, "orders").where(F.col("o_totalprice") > 300000)
-    no_big = c.join(o, c["c_custkey"] == o["o_custkey"], "left_anti").select(
-        "c_custkey", "c_name", F.lit("no_big_orders").alias("order_class")
-    )
-    has_big = c.join(o, c["c_custkey"] == o["o_custkey"], "left_semi").select(
-        "c_custkey", "c_name", F.lit("has_big_orders").alias("order_class")
-    )
-    return no_big.unionByName(has_big)
-
-
-_SQL_ORDER_CLASSES = """
-SELECT c_custkey, c_name,
-  CASE WHEN c_custkey IN (
-         SELECT o_custkey FROM orders WHERE o_totalprice > 300000)
-       THEN 'has_big_orders' ELSE 'no_big_orders' END AS order_class
-FROM customer
-"""
-
-
-# --------------------------------------------------------------------
 # 48. JSON extraction over the events props column (map/JSON metadata
 #     handling, the metadata-dict analog of C13)
 # --------------------------------------------------------------------
@@ -3572,259 +3326,119 @@ FROM t GROUP BY 1, 2
 # --------------------------------------------------------------------
 # Registry
 # --------------------------------------------------------------------
-# --------------------------------------------------------------------
-# Registries.
-#
-# SPARK_QUERIES / ORACLE_SQL are the DRIVER-facing contract: exactly 50
-# entries, each with a DuckDB oracle, ordered never-driver-checked /
-# new / changed first (round 2 showed the driver samples the first 50
-# in dict order — the 9 entries past position 50 were exactly the 9 it
-# skipped).  Near-duplicate demos are merged or moved to
-# LOCAL_QUERIES / LOCAL_ORACLE_SQL, which tools/compare_oracle.py and
-# pytest keep green with the same machinery: nothing lost correctness
-# coverage, only its driver slot.
-#
-# Round-4 rotation: 12 curation/scoring operators that had only local
-# oracle rows (lm_perplexity, bm25_topk, dsir_weights, scrub_passages,
-# rrf_hybrid, semdedup, mix_corpus, clean_lines, gopher_rules,
-# scrub_pii, source_cap, dedup_lines) take driver slots; 12 relational
-# demos that were driver-green in rounds 1-3 (order_cube, event_pivot,
-# salted_counts, order_rollup, topk_orders, len_percentiles,
-# bigram_topk, distinct_tokens, customer_order_classes,
-# region_revenue, envelope, quality_delta) rotate to LOCAL_QUERIES —
-# still verified on every compare_oracle run.
-#
-# Round-5 rotation (finishes the cycle): the last four oracle-bearing
-# queries that never had a driver row — corpus_funnel,
-# duplicate_passages, shuffle_shards, tfidf_top_terms — take driver
-# slots; four of the longest-standing stable entries (driver-green
-# since round 1: weighted_confidence, hourly_rollup, props_json,
-# error_rows) rotate to LOCAL_QUERIES.  After this round every
-# oracle-bearing query in the repo has been driver-verified at least
-# once.
-#
-# Round-5 continuation: the new broadcast tier of the passage scrub
-# (scrub_passages_broadcast — same oracle SQL, pure plan change)
-# takes a driver slot; bucket_ladder rotates to LOCAL_QUERIES (its
-# C9-C12 bucketing family keeps driver coverage via quality_scores,
-# driver-green every round).
-#
-# The mapInArrow extraction path is gone (it ran only the built-in
-# rule, which the HOF plan runs), and with it extract_arrow_spans;
-# window_docs, which never had a driver row, takes its slot.
-# --------------------------------------------------------------------
-SPARK_QUERIES = {
-    # --- promoted in round-5 continuation: first driver row ---
-    "scrub_passages_broadcast": q_scrub_passages_broadcast,
-    # --- promoted in round 5: first-ever driver rows (last four) ---
-    "corpus_funnel": q_corpus_funnel,
-    "duplicate_passages": q_duplicate_passages,
-    "shuffle_shards": q_shuffle_shards,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    # --- driver-green in round 4 ---
-    "lm_perplexity": q_lm_perplexity,
-    "bm25_topk": q_bm25_topk,
-    "dsir_weights": q_dsir_weights,
-    "scrub_passages": q_scrub_passages,
-    "rrf_hybrid": q_rrf_hybrid,
-    "semdedup": q_semdedup,
-    "mix_corpus": q_mix_corpus,
-    "clean_lines": q_clean_lines,
-    "gopher_rules": q_gopher_rules,
-    "scrub_pii": q_scrub_pii,
-    "source_cap": q_source_cap,
-    "dedup_lines": q_dedup_lines,
-    # --- driver-green in round 3 ---
-    "knn_join": q_knn_join,
-    "decontaminate": q_decontaminate,
-    "hash_sample": q_hash_sample,
-    "pack_sequences": q_pack_sequences,
-    "repetition_stats": q_repetition_stats,
-    "curate_corpus": q_curate_corpus,
-    "retry_routing": q_retry_routing,
-    "engine_lang_filter": q_engine_lang_filter,
-    "media_byte_stats": q_media_byte_stats,
-    "ivf_exhaustive_topk": q_ivf_exhaustive_topk,
-    "asof_join": q_asof_join,
-    "interval_join": q_interval_join,
-    "normalize_text": q_normalize_text,
-    "reading_order": q_reading_order,           # also emits gap_class
-    "text_profile": q_text_profile,  # lang_id + fingerprint + token_stats
-    # --- stable, driver-green in earlier rounds ---
-    "extract_clean_spans": q_extract_clean_spans,
-    # first driver row: strided pretraining windows (the
-    # pack_sequences dual)
-    "window_docs": q_window_docs,
-    "fuse_candidates": q_fuse_candidates,
-    "fusion_routing": q_fusion_routing,
-    "session_stats": q_session_stats,
-    "top1_per_group": q_top1_per_group,
-    "batch_stats": q_batch_stats,
-    "consensus_boost": q_consensus_boost,
-    "left_join_fallback": q_left_join_fallback,
-    "exact_dedup": q_exact_dedup,
-    "dedup_then_extract": q_dedup_then_extract,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "quality_scores": q_quality_scores,
-    "strategy_routing": q_strategy_routing,
-    "xy_cut": q_xy_cut,
-    "simhash64_pairs": q_simhash64_pairs,
-    "embedding_near_dup": q_embedding_near_dup,
-}
+@dataclass(frozen=True)
+class Query:
+    """One catalogued query: ``build(spark, sf_dir) -> DataFrame``, the
+    DuckDB SQL that must return the same rows (None where the output is
+    not SQL-replayable) and whether it is one of the driver's rows."""
 
-ORACLE_SQL = {
-    "scrub_passages_broadcast": _SQL_SCRUB_PASSAGES,
-    "corpus_funnel": _SQL_CORPUS_FUNNEL,
-    "duplicate_passages": _SQL_DUP_PASSAGES,
-    "shuffle_shards": _SQL_SHUFFLE_SHARDS,
-    "tfidf_top_terms": _SQL_TFIDF,
-    "lm_perplexity": _SQL_LM_PPL,
-    "bm25_topk": _SQL_BM25,
-    "dsir_weights": _SQL_DSIR,
-    "scrub_passages": _SQL_SCRUB_PASSAGES,
-    "rrf_hybrid": _SQL_RRF,
-    "semdedup": _SQL_SEMDEDUP,
-    "mix_corpus": _SQL_MIX_CORPUS,
-    "clean_lines": _SQL_CLEAN_LINES,
-    "gopher_rules": _SQL_GOPHER_RULES,
-    "scrub_pii": _SQL_SCRUB_PII,
-    "source_cap": _SQL_SOURCE_CAP,
-    "dedup_lines": _SQL_DEDUP_LINES,
-    "knn_join": _SQL_KNN_JOIN,
-    "decontaminate": _SQL_DECONTAMINATE,
-    "hash_sample": _SQL_HASH_SAMPLE,
-    "pack_sequences": _SQL_PACK,
-    "repetition_stats": _SQL_REPETITION,
-    "curate_corpus": _SQL_CURATE,
-    "retry_routing": _SQL_RETRY,
-    "engine_lang_filter": _SQL_ENGINE_LANG,
-    "media_byte_stats": _SQL_MEDIA_BYTE_STATS,
-    "ivf_exhaustive_topk": _SQL_COSINE_TOPK,
-    "asof_join": _SQL_ASOF,
-    "interval_join": _SQL_INTERVAL,
-    "normalize_text": _SQL_NORMALIZE,
-    "reading_order": _SQL_READING_ORDER,
-    "text_profile": _SQL_TEXT_PROFILE,
-    "extract_clean_spans": _SQL_EXTRACT,
-    "window_docs": _SQL_WINDOW_DOCS,
-    "fuse_candidates": _SQL_FUSE,
-    "fusion_routing": _SQL_FUSION_ROUTING,
-    "session_stats": _SQL_SESSION,
-    "top1_per_group": _SQL_TOP1,
-    "batch_stats": _SQL_BATCH_STATS,
-    "consensus_boost": _SQL_CONSENSUS_BOOST,
-    "left_join_fallback": _SQL_LEFT_JOIN,
-    "exact_dedup": _SQL_EXACT_DEDUP,
-    "dedup_then_extract": _SQL_DEDUP_EXTRACT,
-    "minhash_lsh_pairs": _SQL_MINHASH,
-    "ann_lsh_topk": _SQL_ANN_LSH,
-    "quality_scores": _SQL_QUALITY,
-    "strategy_routing": _SQL_STRATEGY,
-    "xy_cut": _SQL_XY_CUT,
-    "simhash64_pairs": _SQL_SIMHASH64_PAIRS,
-    "embedding_near_dup": _SQL_EMB_NEAR_DUP,
-}
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None
+    driver: bool = False
 
-# Folded out of the driver contract (cap), still verified locally on
-# every tools/compare_oracle.py run and by pytest: engine-path
-# duplicates (pytest pins all three paths row-identical, so one driver
-# row covers them), the 16-bit simhash demo tier, the standalone forms
-# of the merged queries, and the three by-design-no-oracle queries.
-LOCAL_QUERIES = {
-    # folded: ivf_exhaustive_topk shares this exact oracle SQL and
-    # exercises a superset of the machinery, so one driver row covers
-    # both; the standalone form stays locally verified
-    "cosine_topk": q_cosine_topk,
-    # folded: the exact-Jaccard pair tier is the bounded verification
-    # oracle for the MinHash tier that stays driver-checked
-    "near_dup_pairs": q_near_dup_pairs,
-    # folded: U2's two-slice union+distinct demo — the union primitive
-    # itself rides in several driver queries' plans
-    "union_slices": q_union_slices,
-    # folded: the C1-C6 ladder family keeps bucket_ladder,
-    # quality_scores AND normalize_text driver-checked
-    "boost_ladder": q_boost_ladder,
-    # folded: U1's adjacent-pair Jaccard demo — the jaccard_sets
-    # primitive also rides in the driver-checked consensus fusion
-    "jaccard_adjacent": q_jaccard_adjacent,
-    "extract_chunked_spans": q_extract_chunked_spans,
-    "extract_pandas_spans": q_extract_pandas_spans,
-    # rotated in the round-5 continuation: C9-C12 bucketing family
-    # keeps driver coverage via quality_scores
-    "bucket_ladder": q_bucket_ladder,
-    # disjoint deterministic train/val/test bands (hash_sample's
-    # partition form)
-    "split_corpus": q_split_corpus,
-    "gap_class": q_gap_class,
-    "customers_no_orders": q_customers_no_orders,
-    "customers_with_big_orders": q_customers_with_big_orders,
-    "lang_id": q_lang_id,
-    "fingerprint": q_fingerprint,
-    "token_stats": q_token_stats,
-    "minhash_sigs": q_minhash_sigs,
-    "simhash_sigs": q_simhash_sigs,
-    "simhash_pairs": q_simhash_pairs,
-    "quality_classifier": q_quality_classifier,  # no oracle: ml model weights not SQL-replayable; pytest-pinned (AUC, refit stability)
-    "bpe_tokens": q_bpe_tokens,              # no oracle: iterative merges not SQL-replayable; pytest-pinned vs python reference
-    "span_pipeline": q_span_pipeline,        # no oracle: pytest-pinned
-    "ivf_topk": q_ivf_topk,                  # no oracle: recall-bounded
-    "media_decode": q_media_decode,          # no oracle: determinism test
-    # --- rotated out of the driver contract in round 5 (driver-green
-    # rounds 1-4; still verified here on every compare_oracle run) ---
-    "weighted_confidence": q_weighted_confidence,
-    "hourly_rollup": q_hourly_rollup,
-    "props_json": q_props_json,
-    "error_rows": q_error_rows,
-    # --- rotated out of the driver contract in round 4 (driver-green
-    # rounds 1-3; still verified here on every compare_oracle run) ---
-    "salted_counts": q_salted_counts,
-    "order_rollup": q_order_rollup,
-    "customer_order_classes": q_customer_order_classes,
-    "envelope": q_envelope,
-    "region_revenue": q_region_revenue,
-    "quality_delta": q_quality_delta,
-    "distinct_tokens": q_distinct_tokens,
-    "topk_orders": q_topk_orders,
-    "len_percentiles": q_len_percentiles,
-    "bigram_topk": q_bigram_topk,
-    "event_pivot": q_event_pivot,
-    "order_cube": q_order_cube,
-}
+    @property
+    def name(self) -> str:
+        return self.build.__name__.removeprefix("q_")
 
-LOCAL_ORACLE_SQL = {
-    "cosine_topk": _SQL_COSINE_TOPK,
-    "near_dup_pairs": _SQL_NEAR_DUP,
-    "union_slices": _SQL_UNION,
-    "boost_ladder": _SQL_BOOST,
-    "jaccard_adjacent": _SQL_JACCARD_ADJ,
-    "extract_chunked_spans": _SQL_EXTRACT_CHUNKED,
-    "extract_pandas_spans": _SQL_EXTRACT_CHUNKED,
-    "bucket_ladder": _SQL_BUCKET,
-    "split_corpus": _SQL_SPLIT_CORPUS,
-    "gap_class": _SQL_GAP_CLASS,
-    "customers_no_orders": _SQL_ANTI,
-    "customers_with_big_orders": _SQL_SEMI,
-    "lang_id": _SQL_LANG,
-    "fingerprint": _SQL_FINGERPRINT,
-    "token_stats": _SQL_TOKEN_STATS,
-    "minhash_sigs": _SQL_MINHASH_SIGS,
-    "simhash_sigs": _SQL_SIMHASH_SIGS,
-    "simhash_pairs": _SQL_SIMHASH_PAIRS,
-    "weighted_confidence": _SQL_WEIGHTED,
-    "hourly_rollup": _SQL_HOURLY,
-    "props_json": _SQL_PROPS_JSON,
-    "error_rows": _SQL_ERROR_ROWS,
-    "salted_counts": _SQL_SALTED_COUNTS,
-    "order_rollup": _SQL_ORDER_ROLLUP,
-    "customer_order_classes": _SQL_ORDER_CLASSES,
-    "envelope": _SQL_ENVELOPE,
-    "region_revenue": _SQL_REGION_REVENUE,
-    "quality_delta": _SQL_QUALITY_DELTA,
-    "distinct_tokens": _SQL_DISTINCT_TOKENS,
-    "topk_orders": _SQL_TOPK_ORDERS,
-    "len_percentiles": _SQL_LEN_PCT,
-    "bigram_topk": _SQL_BIGRAM,
-    "event_pivot": _SQL_PIVOT,
-    "order_cube": _SQL_CUBE,
+
+# Insertion-ordered: the driver samples the first 50 entries, so the 50
+# driver rows come first.  Every other oracle-bearing query is still
+# checked by tools/compare_oracle.py and tests/test_local_oracles.py.
+QUERIES: dict[str, Query] = {
+    q.name: q
+    for q in [
+        *(
+            Query(build, oracle, driver=True)
+            for build, oracle in [
+                (q_scrub_passages_broadcast, _SQL_SCRUB_PASSAGES),
+                (q_corpus_funnel, _SQL_CORPUS_FUNNEL),
+                (q_duplicate_passages, _SQL_DUP_PASSAGES),
+                (q_shuffle_shards, _SQL_SHUFFLE_SHARDS),
+                (q_tfidf_top_terms, _SQL_TFIDF),
+                (q_lm_perplexity, _SQL_LM_PPL),
+                (q_bm25_topk, _SQL_BM25),
+                (q_dsir_weights, _SQL_DSIR),
+                (q_scrub_passages, _SQL_SCRUB_PASSAGES),
+                (q_rrf_hybrid, _SQL_RRF),
+                (q_semdedup, _SQL_SEMDEDUP),
+                (q_mix_corpus, _SQL_MIX_CORPUS),
+                (q_clean_lines, _SQL_CLEAN_LINES),
+                (q_gopher_rules, _SQL_GOPHER_RULES),
+                (q_scrub_pii, _SQL_SCRUB_PII),
+                (q_source_cap, _SQL_SOURCE_CAP),
+                (q_dedup_lines, _SQL_DEDUP_LINES),
+                (q_knn_join, _SQL_KNN_JOIN),
+                (q_decontaminate, _SQL_DECONTAMINATE),
+                (q_hash_sample, _SQL_HASH_SAMPLE),
+                (q_pack_sequences, _SQL_PACK),
+                (q_repetition_stats, _SQL_REPETITION),
+                (q_curate_corpus, _SQL_CURATE),
+                (q_retry_routing, _SQL_RETRY),
+                (q_engine_lang_filter, _SQL_ENGINE_LANG),
+                (q_media_byte_stats, _SQL_MEDIA_BYTE_STATS),
+                (q_ivf_exhaustive_topk, _SQL_COSINE_TOPK),
+                (q_asof_join, _SQL_ASOF),
+                (q_interval_join, _SQL_INTERVAL),
+                (q_normalize_text, _SQL_NORMALIZE),
+                (q_reading_order, _SQL_READING_ORDER),
+                (q_text_profile, _SQL_TEXT_PROFILE),
+                (q_extract_clean_spans, _SQL_EXTRACT),
+                (q_window_docs, _SQL_WINDOW_DOCS),
+                (q_fuse_candidates, _SQL_FUSE),
+                (q_fusion_routing, _SQL_FUSION_ROUTING),
+                (q_session_stats, _SQL_SESSION),
+                (q_top1_per_group, _SQL_TOP1),
+                (q_batch_stats, _SQL_BATCH_STATS),
+                (q_consensus_boost, _SQL_CONSENSUS_BOOST),
+                (q_left_join_fallback, _SQL_LEFT_JOIN),
+                (q_exact_dedup, _SQL_EXACT_DEDUP),
+                (q_dedup_then_extract, _SQL_DEDUP_EXTRACT),
+                (q_minhash_lsh_pairs, _SQL_MINHASH),
+                (q_ann_lsh_topk, _SQL_ANN_LSH),
+                (q_quality_scores, _SQL_QUALITY),
+                (q_strategy_routing, _SQL_STRATEGY),
+                (q_xy_cut, _SQL_XY_CUT),
+                (q_simhash64_pairs, _SQL_SIMHASH64_PAIRS),
+                (q_embedding_near_dup, _SQL_EMB_NEAR_DUP),
+            ]
+        ),
+        # Standalone forms of driver rows: ivf_exhaustive_topk runs
+        # cosine_topk's oracle over a superset of its machinery;
+        # reading_order emits gap_class; text_profile merges lang_id,
+        # fingerprint and token_stats; pytest pins the chunked and
+        # pandas extraction paths row-identical to extract_clean_spans.
+        Query(q_cosine_topk, _SQL_COSINE_TOPK),
+        Query(q_near_dup_pairs, _SQL_NEAR_DUP),
+        Query(q_union_slices, _SQL_UNION),
+        Query(q_boost_ladder, _SQL_BOOST),
+        Query(q_jaccard_adjacent, _SQL_JACCARD_ADJ),
+        Query(q_extract_chunked_spans, _SQL_EXTRACT_CHUNKED),
+        Query(q_extract_pandas_spans, _SQL_EXTRACT_CHUNKED),
+        Query(q_bucket_ladder, _SQL_BUCKET),
+        Query(q_split_corpus, _SQL_SPLIT_CORPUS),
+        Query(q_gap_class, _SQL_GAP_CLASS),
+        Query(q_lang_id, _SQL_LANG),
+        Query(q_fingerprint, _SQL_FINGERPRINT),
+        Query(q_token_stats, _SQL_TOKEN_STATS),
+        Query(q_minhash_sigs, _SQL_MINHASH_SIGS),
+        Query(q_simhash_sigs, _SQL_SIMHASH_SIGS),
+        Query(q_simhash_pairs, _SQL_SIMHASH_PAIRS),
+        # ml model weights are not SQL-replayable; pytest pins AUC and
+        # refit stability
+        Query(q_quality_classifier, None),
+        # iterative merges are not SQL-replayable; pytest pins them
+        # against the Python reference
+        Query(q_bpe_tokens, None),
+        Query(q_span_pipeline, None),  # pytest-pinned
+        Query(q_ivf_topk, None),  # approximate: recall-bounded in pytest
+        Query(q_media_decode, None),  # pytest pins determinism
+        Query(q_weighted_confidence, _SQL_WEIGHTED),
+        Query(q_hourly_rollup, _SQL_HOURLY),
+        Query(q_props_json, _SQL_PROPS_JSON),
+        Query(q_error_rows, _SQL_ERROR_ROWS),
+        Query(q_envelope, _SQL_ENVELOPE),
+        Query(q_quality_delta, _SQL_QUALITY_DELTA),
+        Query(q_distinct_tokens, _SQL_DISTINCT_TOKENS),
+        Query(q_len_percentiles, _SQL_LEN_PCT),
+    ]
 }

@@ -201,7 +201,6 @@ def extract(
     docs: DataFrame,
     candidates: DataFrame | None = None,
     passthrough: list[str] | None = None,
-    early_termination: float | None = None,
     retry_candidates: DataFrame | None = None,
     retry_threshold: float = 0.3,
 ) -> DataFrame:
@@ -217,12 +216,6 @@ def extract(
     two-pass form — spans whose first-pass fused confidence is below
     ``retry_threshold`` (0.3, the reference gate) are re-fused over
     this alternative recognition pass, and the better result wins.
-    Mutually exclusive with ``early_termination`` (the reference never
-    combines the PSM fallback with the engine-cascade short-circuit;
-    combining them here would retry spans the gate already resolved).
-    ``early_termination`` does not change the plan: the gate settles a
-    span's fused confidence and method, never its winning text, and
-    extraction reads only that text.
 
     Never-fail contract: invalid input docs are NOT dropped — they emit
     (doc_id, [], status{ok=false, reason}) rows (doc_status_expr).  The
@@ -230,10 +223,6 @@ def extract(
     rather than a filter-split-union, which would scan the source twice;
     their join keys are null/rare so they add no shuffle skew of note.
     """
-    if retry_candidates is not None and early_termination is not None:
-        raise ValueError(
-            "retry_candidates and early_termination are mutually exclusive"
-        )
     docs = _with_fused_map(
         docs.withColumn("status", doc_status_expr()),
         candidates,

@@ -66,7 +66,6 @@ def run_pipeline(
     candidates: DataFrame | None = None,
     normalize: str | None = None,
     measure_improvement: bool = False,
-    early_termination: float | None = None,
     scrub_pii: bool = False,
 ) -> DataFrame:
     """Full composed pipeline.  ``normalize`` in {None, 'minimal',
@@ -93,7 +92,6 @@ def run_pipeline(
             candidates,
             normalize=normalize,
             measure_improvement=measure_improvement,
-            early_termination=early_termination,
         )
         scrubbed = [
             scrub_spans(F.col(c)).alias(c) if c == "spans" else c
@@ -103,7 +101,7 @@ def run_pipeline(
     if normalize is None:
         if measure_improvement:
             raise ValueError("measure_improvement requires a normalize tier")
-        return extract(docs, candidates, early_termination=early_termination)
+        return extract(docs, candidates)
 
     from ocr_project_spark.functions import features as FT
 
@@ -120,8 +118,7 @@ def run_pipeline(
             "_strategy",
             FT.strategy_expr(FT.quality_score_expr(FT.doc_features_expr(F.col("spans")))),
         )
-        out = extract(staged, candidates, passthrough=["_strategy"],
-                      early_termination=early_termination)
+        out = extract(staged, candidates, passthrough=["_strategy"])
         normalized = F.transform(
             F.col("spans"),
             lambda s: F.struct(
@@ -134,5 +131,5 @@ def run_pipeline(
         return _finish(out, normalized)
     if normalize not in _TIERS:
         raise ValueError(f"unknown normalize tier: {normalize!r}")
-    out = extract(docs, candidates, early_termination=early_termination)
+    out = extract(docs, candidates)
     return _finish(out, _normalize_spans(F.col("spans"), normalize))

@@ -20,8 +20,7 @@ North_rule clauses implemented here:
 
   - hot-key skew in *exploded* stages (the fusion groupBy sees many
     candidate rows for one (doc_id, offset)): handled by AQE skew
-    splitting (session.py enables spark.sql.adaptive.skewJoin) plus the
-    two-phase salted aggregate helper below for pre-AQE safety.
+    splitting (session.py enables spark.sql.adaptive.skewJoin).
 
 * intra-doc chunking — a single 10^8-span document cannot be split by
   salting (grouped/UDF stages see whole rows).  ``chunk_documents``
@@ -107,30 +106,6 @@ def repartition_for_extract(
     return salted.repartition(num_partitions, F.col("doc_id"), F.col("_salt")).drop(
         "_salt"
     )
-
-
-def salted_two_phase_count(
-    df: DataFrame, key: str, salt_buckets: int = 16
-) -> DataFrame:
-    """Two-phase (salted partial -> final) aggregate for hot keys, the
-    hand-rolled analog of what AQE skew handling does at runtime:
-    groupBy(key, salt) partial counts, then groupBy(key) sum.
-    Returns (key, cnt).
-
-    The salt folds in spark_partition_id(): identical hot-key rows
-    spread across as many salt values as input partitions touch them,
-    and the value is stable under task retry (the partition id is
-    pinned to the input split, unlike monotonically_increasing_id
-    which depends on runtime row order).
-    """
-    salt = F.pmod(F.hash(F.col(key), F.spark_partition_id()),
-                  F.lit(salt_buckets))
-    partial = (
-        df.withColumn("_salt", salt)
-        .groupBy(key, "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial"))
-    )
-    return partial.groupBy(key).agg(F.sum("_partial").cast("long").alias("cnt"))
 
 
 def chunk_documents(

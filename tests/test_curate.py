@@ -612,7 +612,7 @@ def test_corpus_funnel_monotone(spark):
 
     rows = {
         r["stage"]: r
-        for r in harness.SPARK_QUERIES["corpus_funnel"](
+        for r in harness.QUERIES["corpus_funnel"].build(
             spark, "/root/testdata/sf0.001"
         ).collect()
     }

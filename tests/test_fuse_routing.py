@@ -268,7 +268,6 @@ def test_extract_with_retry_pipeline(corpus_dfs, spark):
     """extract(retry_candidates=...) resolves media spans with the
     two-pass fused text: every media span in the output must carry
     exactly fuse_with_retry's winner for its (doc_id, offset)."""
-    import pytest as _pytest
     from pyspark.sql import functions as F
 
     from ocr_project_spark.functions.fuse import fuse_with_retry
@@ -308,10 +307,6 @@ def test_extract_with_retry_pipeline(corpus_dfs, spark):
     assert checked > 0
     # some span must actually have taken the retry text
     assert any(t is not None and t.startswith("retry:") for t in want.values())
-
-    with _pytest.raises(ValueError, match="mutually exclusive"):
-        extract(docs_df, cands_df, early_termination=0.9,
-                retry_candidates=retry_df)
 
 
 def test_checkpointed_retry_matches_single_pass(spark, corpus_dfs, tmp_path):
@@ -584,7 +579,6 @@ def test_winner_map_equals_fused_text(spark, rows, dup_idx, threshold):
         return {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in df.collect()}
 
     plain = spans(extract(docs, cands))
-    assert plain == spans(extract(docs, cands, early_termination=threshold))
     for d, out in plain.items():
         for _, text, ref, o in out:
             assert o == int(ref[1:])
@@ -605,5 +599,4 @@ def test_extract_plan_has_no_window(corpus_dfs):
         return df._jdf.queryExecution().executedPlan().toString()
 
     assert "Window" not in plan(extract(docs_df, cands_df))
-    assert "Window" not in plan(extract(docs_df, cands_df, early_termination=0.5))
     assert "Window" in plan(extract(docs_df, cands_df, retry_candidates=cands_df))

@@ -111,7 +111,7 @@ def test_lsh_recall_floor_on_defaults(spark, emb):
 def test_driver_query_shape(spark):
     from ocr_project_spark import harness
 
-    df = harness.SPARK_QUERIES["knn_join"](spark, "/root/testdata/sf0.001")
+    df = harness.QUERIES["knn_join"].build(spark, "/root/testdata/sf0.001")
     rows = df.collect()
     assert df.columns == ["qid", "vec_id", "cosine"]
     assert rows and all(r["qid"] in (0, 1, 2) for r in rows)

@@ -1,7 +1,7 @@
-"""The folded-out LOCAL_QUERIES registry must stay oracle-green: this
-replicates the driver's compare (row count, column names,
+"""The non-driver records of harness.QUERIES must stay oracle-green:
+this replicates the driver's compare (row count, column names,
 order-insensitive value hash) over every local oracle at sf0.001, so
-queries that lost their driver slot to the 50-entry cap cannot rot.
+queries outside the 50 driver rows cannot rot.
 """
 
 from __future__ import annotations
@@ -32,11 +32,14 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", sorted(harness.LOCAL_ORACLE_SQL))
+@pytest.mark.parametrize("name", sorted(
+    n for n, q in harness.QUERIES.items() if not q.driver and q.oracle
+))
 def test_local_query_matches_oracle(name, spark, duck):
-    sdf = harness.LOCAL_QUERIES[name](spark, SF_DIR)
+    q = harness.QUERIES[name]
+    sdf = q.build(spark, SF_DIR)
     s_cols, s_rows = sdf.columns, [tuple(r) for r in sdf.collect()]
-    res = duck.execute(harness.LOCAL_ORACLE_SQL[name])
+    res = duck.execute(q.oracle)
     d_cols = [d[0] for d in res.description]
     d_rows = res.fetchall()
     assert sorted(s_cols) == sorted(d_cols)

@@ -92,15 +92,6 @@ def test_salting_leaves_normal_docs_unsplit(spark):
     assert all(r["nparts"] == 1 for r in per_key)
 
 
-def test_salted_two_phase_count(spark):
-    df = spark.range(1000).select((F.col("id") % 7).cast("string").alias("k"))
-    got = {r["k"]: r["cnt"] for r in partitioning.salted_two_phase_count(df, "k").collect()}
-    import collections
-
-    exp = collections.Counter(str(i % 7) for i in range(1000))
-    assert got == dict(exp)
-
-
 # ------------------------------------------------------------------ chunking
 def test_chunked_extract_equals_plain(corpus_dfs):
     docs_df, cands_df = corpus_dfs

@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run every
-queries() entry on Spark and its oracle_sql() on DuckDB at sf0.01,
-compare row count, column names, and an order-insensitive value hash.
+harness.QUERIES record on Spark and its oracle on DuckDB at sf0.01
+(driver rows first), compare row count, column names, and an
+order-insensitive value hash.
 
 Usage: python tools/compare_oracle.py [--agg] [--skip NAME]... [sf_dir] [query ...]
 
@@ -72,7 +73,7 @@ def main():
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    import __spark_entry__ as entrymod
+    from ocr_project_spark import caching, harness
     from ocr_project_spark.session import get_spark
 
     # large-sf gates want more cores/partitions than the sf0.01 default;
@@ -95,42 +96,31 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    from ocr_project_spark import harness
-
-    # driver-facing contract first, then the locally-verified fold-outs
-    qs = dict(entrymod.queries())
-    osql = dict(entrymod.oracle_sql())
-    for k, v in harness.LOCAL_QUERIES.items():
-        qs.setdefault(k, v)
-    for k, v in harness.LOCAL_ORACLE_SQL.items():
-        osql.setdefault(k, v)
-    from ocr_project_spark import caching
-
     n_pass = n_fail = 0
-    for name, fn in qs.items():
+    for name, q in harness.QUERIES.items():
         if only and name not in only:
             continue
         if name in skip:
             print(f"SKIP {name}: --skip")
             continue
-        # 87 queries share this session: drop each query's
+        # every query shares this session: drop each query's
         # operator-internal persists before the next so cached
         # corpus/vocabulary-scale tables don't accumulate at large sf
         caching.release_all(blocking=True)
         try:
-            sdf = fn(spark, sf_dir)
+            sdf = q.build(spark, sf_dir)
             s_cols = sdf.columns
         except Exception as e:
             print(f"FAIL {name}: SPARK ERROR {type(e).__name__}: {str(e)[:300]}")
             n_fail += 1
             continue
 
-        if agg_mode and name in osql:
+        if agg_mode and q.oracle is not None:
             import agg_hash
 
             s_canon = agg_hash.spark_canon_expr(sdf.schema)
             try:
-                d_desc = con.execute(f"DESCRIBE {osql[name]}").fetchall()
+                d_desc = con.execute(f"DESCRIBE {q.oracle}").fetchall()
                 d_canon = agg_hash.duck_canon_expr(d_desc)
             except Exception as e:
                 print(f"FAIL {name}: DUCKDB ERROR {str(e)[:300]}")
@@ -154,7 +144,7 @@ def main():
                         continue
                     try:
                         d_n, d_lo, d_hi = con.execute(
-                            agg_hash.duck_agg_sql(d_canon, osql[name])
+                            agg_hash.duck_agg_sql(d_canon, q.oracle)
                         ).fetchone()
                     except Exception as e:
                         print(f"FAIL {name}: DUCKDB ERROR {str(e)[:300]}")
@@ -181,11 +171,11 @@ def main():
             print(f"FAIL {name}: SPARK ERROR {type(e).__name__}: {str(e)[:300]}")
             n_fail += 1
             continue
-        if name not in osql:
+        if q.oracle is None:
             print(f"SKIP {name}: no oracle (rows={len(s_rows)})")
             continue
         try:
-            res = con.execute(osql[name])
+            res = con.execute(q.oracle)
             d_cols = [d[0] for d in res.description]
             d_rows = res.fetchall()
         except Exception as e:

@@ -60,7 +60,6 @@ sf_dir = {sf_dir!r}
 spark = get_spark(app_name="data_scaling", master={master!r},
                   shuffle_partitions={shuf},
                   extra_conf={{"spark.sql.files.maxPartitionBytes": "8m"}})
-qs = dict(harness.SPARK_QUERIES); qs.update(harness.LOCAL_QUERIES)
 n_docs = spark.read.parquet(f"{{sf_dir}}/documents.parquet").count()
 out = {{}}
 for name in {jobs!r}:
@@ -69,7 +68,7 @@ for name in {jobs!r}:
         caching.release_all(blocking=True)
         t0 = time.monotonic()
         # noop sink: full evaluation, rows never cross to Python
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        harness.QUERIES[name].build(spark, sf_dir).write.format("noop").mode("overwrite").save()
         dt = time.monotonic() - t0
         best = dt if best is None or dt < best else best
     out[name] = best

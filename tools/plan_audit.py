@@ -25,8 +25,7 @@ AUDITED = [
     "decontaminate",
     "hash_sample",
     "boost_ladder",
-    "region_revenue",
-    "topk_orders",
+    "cosine_topk",
     "near_dup_pairs",
     "extract_clean_spans",
     "fusion_routing",
@@ -36,7 +35,6 @@ AUDITED = [
     "retry_routing",
     "engine_lang_filter",
     "dedup_then_extract",
-    "customer_order_classes",
     "text_profile",
     "curate_corpus",
     "semdedup",
@@ -124,8 +122,7 @@ def main() -> None:
         "",
     ]
     for q in AUDITED:
-        fn = harness.SPARK_QUERIES.get(q) or harness.LOCAL_QUERIES[q]
-        plan = fmt(fn(spark, sf))
+        plan = fmt(harness.QUERIES[q].build(spark, sf))
         out.append(f"## {q}")
         out.extend(scan_lines(plan) or ["    (no scan-level entries)"])
         out.append("")
@@ -182,7 +179,7 @@ def main() -> None:
     # name from its hashpartitioning arguments.
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        harness.SPARK_QUERIES["knn_join"](spark, sf).explain()
+        harness.QUERIES["knn_join"].build(spark, sf).explain()
     plan = buf.getvalue()
     n_hash_ex = plan.count("Exchange hashpartitioning")
     has_bcast = "BroadcastExchange" in plan
