@@ -16,6 +16,11 @@ passage/exact dedup next, corpus-model stages (LM, DSIR) after the
 corpus is clean, and packing/sharding last because they must see the
 final survivor set.
 
+The per-row stages (cap, clean-lines, gopher, PII scrub, exact dedup,
+shards) apply to the rows in place: one input row, at most one output
+row.  Only scrub-passages, LM, DSIR and BPE build a model or key set
+from the rows and join it back.
+
 Packaged like job.py for `spark-submit --py-files` (tools/
 make_pyfiles.py); every stage is also reachable as a library call —
 this CLI only composes public operators.
@@ -123,8 +128,8 @@ def build_parser() -> argparse.ArgumentParser:
         "isolation (stage_wall_s), but the whole corpus is materialized "
         "once PER stage. 'observe' fuses the ladder into one write "
         "action and cuts only the input of stages whose construction "
-        "fans out over it (gopher/scrub-passages/lm/dsir/bpe/shards "
-        "build a model or key set from the same rows they then filter) "
+        "fans out over it (scrub-passages/lm/dsir/bpe build a model "
+        "or key set from the same rows they then filter) "
         "-- the corpus streams ONCE.  At 10^12-doc scale 'observe' is "
         "the production mode: per-stage materialization multiplies "
         "corpus I/O by the ladder depth, which a memory-bandwidth-bound "
@@ -264,19 +269,12 @@ def main(argv: list[str] | None = None) -> int:
 
     def fanout_input(df):
         # observe mode only (persist mode cut at the last record()): a
-        # stage that consumes its input in more than one subtree (model
-        # build / key-set election + the join back onto the same rows)
-        # would re-execute the entire fused upstream lineage once per
-        # subtree.  Cut the lineage EAGERLY: if the fill were left to
-        # the final write action, the two consuming subtrees are
-        # independent shuffle-map stages that the scheduler runs
-        # CONCURRENTLY, both compute the same unmaterialized partitions,
-        # and every observe() node above double-fires (measured on the
-        # standalone cluster: 00_input counted 656k docs of a 500k
-        # corpus).  The eager fill is one deterministic pass that fires
-        # each upstream observation exactly once; both subtrees then
-        # read the cut.  Not a reliable checkpoint(): it runs the plan
-        # twice (count, then file write) and double-fires the same way.
+        # stage that reads its input in two subtrees (model or key-set
+        # build + the join back onto the same rows) would run the fused
+        # upstream once per subtree, CONCURRENTLY, and every observe()
+        # node above double-fires (measured on the standalone cluster:
+        # 00_input counted 656k docs of a 500k corpus).  One eager cut
+        # fires each upstream observation once; both subtrees read it.
         if args.funnel != "observe":
             return df
         return cut_lineage(df, _cuts)
@@ -284,7 +282,9 @@ def main(argv: list[str] | None = None) -> int:
     from ocr_project_spark import caching
 
     try:
-        cur = spark.read.parquet(args.input).select("doc_id", "text")
+        # source rides along only for the cap, which drops it again
+        extra = ["source"] if args.cap_per_source is not None else []
+        cur = spark.read.parquet(args.input).select("doc_id", "text", *extra)
         if args.repartition_input is not None:
             # before record(): a lineage cut freezes partitioning for the
             # whole ladder, so the repair must precede the first cut
@@ -294,15 +294,11 @@ def main(argv: list[str] | None = None) -> int:
         if args.cap_per_source is not None:
             from ocr_project_spark.operators.curate import cap_per_source
 
-            # cap first: over-representation shaping shrinks every later
-            # stage; semi-join keeps the ladder's (doc_id, text) shape
-            # without threading the source column through the stages
-            keys = cap_per_source(
-                spark.read.parquet(args.input).select("doc_id", "source"),
-                cap=args.cap_per_source,
-                salt=args.run_id,
-            ).select("doc_id")
-            cur = cur.join(keys, "doc_id", "left_semi")
+            # cap first: it shrinks every later stage.  Null-id rows
+            # take cap slots but, as at every id-keyed stage, do not survive
+            cur = cap_per_source(
+                cur, cap=args.cap_per_source, salt=args.run_id
+            ).where(F.col("doc_id").isNotNull()).select("doc_id", "text")
             cur = record(cur, "05_source_cap")
 
         if args.clean_lines:
@@ -316,11 +312,11 @@ def main(argv: list[str] | None = None) -> int:
             cur = record(cur, "10_clean_lines")
 
         if args.gopher:
-            from ocr_project_spark.operators.curate import gopher_rules
+            from ocr_project_spark.operators.curate import gopher_columns
 
-            cur = fanout_input(cur)
-            keep = gopher_rules(cur, **gk).where("keep").select("doc_id")
-            cur = cur.join(keep, "doc_id")
+            # each row judged by its own text: a filter, not a key set
+            keep = gopher_columns(F.col("text"), **gk)["keep"]
+            cur = cur.where(keep & F.col("doc_id").isNotNull())
             cur = record(cur, "20_gopher")
 
         if args.scrub_pii:
@@ -348,19 +344,11 @@ def main(argv: list[str] | None = None) -> int:
             from ocr_project_spark.operators.dedup import normalized_text
 
             # window-rank form of exact_dedup's keeper election: ONE
-            # exchange on the text hash and no join back onto the corpus
-            # (the groupBy+join form scans the stage twice and plans a
-            # second exchange).  For unique doc_ids this is exactly the
-            # old join-on-keeper_id survivor set: the min-non-null-id row
-            # per identical normalized text survives, null-id rows never
-            # do (min() skips nulls; an equi-join on doc_id drops them).
-            # For DUPLICATE doc_id rows the forms diverge — the join kept
-            # every row carrying the keeper id (including distinct texts
-            # under one id), the window keeps exactly one row per distinct
-            # normalized text — which is the semantics "exact dedup"
-            # actually promises; the operator-level exact_dedup() keeps
-            # the (keeper_id, n_copies) accounting contract for callers
-            # that need it.
+            # exchange on the text hash and no join back onto the corpus.
+            # The min-non-null-id row per normalized text survives and
+            # null-id rows never do; where rows share a doc_id it keeps
+            # one row per distinct normalized text, whereas the operator
+            # exact_dedup() keeps every row carrying the keeper id.
             w = Window.partitionBy("_th").orderBy(F.asc_nulls_last("doc_id"))
             cur = (
                 cur.withColumn("_th", F.md5(normalized_text(F.col("text"))))
@@ -399,9 +387,8 @@ def main(argv: list[str] | None = None) -> int:
             from ocr_project_spark.operators.pack import pack_sequences
 
             # learn_bpe is an action (driver-side merge training): in
-            # observe mode its sample scan is the first consumer of the
-            # guarded cache, so the fused upstream executes once here and
-            # the final write reads the cache
+            # observe mode it reads the cut, so the fused upstream runs
+            # once here and the final write reads the cut too
             cur = fanout_input(cur)
             merges = learn_bpe(cur, n_merges=args.bpe_merges)
             counts = apply_bpe(cur, merges)
@@ -416,11 +403,12 @@ def main(argv: list[str] | None = None) -> int:
         if args.shards is not None:
             from ocr_project_spark.operators.curate import shuffle_shards
 
-            cur = fanout_input(cur)
-            sh = shuffle_shards(
-                cur.select("doc_id"), n_shards=args.shards, salt=args.shard_salt
+            # the window deals the full rows in its one exchange on shard
+            cur = shuffle_shards(
+                cur.where(F.col("doc_id").isNotNull()),
+                n_shards=args.shards,
+                salt=args.shard_salt,
             )
-            cur = cur.join(sh, "doc_id")
             extra_cols += ["shard", "pos"]
 
         # posixpath-style join, not os.path.join: the output root may be a

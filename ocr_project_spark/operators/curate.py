@@ -45,7 +45,7 @@ transitive cluster-level election is required instead, use
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_project_spark import caching
@@ -736,10 +736,8 @@ def scrub_pii(
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_rules(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+def gopher_columns(
+    text: Column,
     min_words: int = 50,
     max_words: int = 100_000,
     min_mean_word_len: float = 3.0,
@@ -748,26 +746,13 @@ def gopher_rules(
     min_alpha_frac: float = 0.8,
     min_stopwords: int = 2,
     stopwords: tuple[str, ...] = GOPHER_STOPWORDS,
-) -> DataFrame:
-    """Gopher document-level quality rules (Rae et al. 2021, Table A1):
-    word count within [min_words, max_words], mean word length within
-    [min_mean_word_len, max_mean_word_len], symbol-to-word ratio
-    (``#`` or ``...`` occurrences per word) below max_symbol_ratio,
-    at least min_alpha_frac of words containing an alphabetic
-    character, and at least min_stopwords DISTINCT stopwords present.
-
-    Completes the quality trio: ``clean_lines`` (C4, line level) →
-    ``gopher_rules`` (document level) → ``repetition_stats`` (Gopher
-    repetition section).  Like those, one projection of array HOFs —
-    no shuffle, no Python, codegen'd end-to-end.
-
-    Ratios are rounded to 4 decimals so a float boundary cannot
-    straddle an oracle comparison.  Returns (id_col, n_words,
-    mean_word_len, symbol_ratio, alpha_frac, n_stop, keep); rows are
-    never dropped — callers filter on ``keep``.
-    """
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    words = tokens(F.col(text_col))
+) -> dict[str, Column]:
+    """The Gopher rule over one text Column: its metric Columns and the
+    ``keep`` verdict, by output name in ``gopher_rules`` order.  The one
+    definition of the rule -- ``gopher_rules`` projects all of them,
+    a filtering caller (curate_job) needs only ``keep``."""
+    filled = F.coalesce(text, F.lit(""))
+    words = tokens(text)
     n = F.size(words)
     char_sum = F.aggregate(
         words, F.lit(0), lambda acc, w: acc + F.length(w)
@@ -775,8 +760,8 @@ def gopher_rules(
     mean_len = F.round(
         F.when(n > 0, char_sum.cast("double") / n).otherwise(F.lit(0.0)), 4
     )
-    n_sym = F.regexp_count(text, F.lit("#")) + F.regexp_count(
-        text, F.lit(r"\.\.\.")
+    n_sym = F.regexp_count(filled, F.lit("#")) + F.regexp_count(
+        filled, F.lit(r"\.\.\.")
     )
     sym_ratio = F.round(
         F.when(n > 0, n_sym.cast("double") / n).otherwise(F.lit(0.0)), 4
@@ -800,14 +785,39 @@ def gopher_rules(
         & (alpha_frac >= F.lit(min_alpha_frac))
         & (n_stop >= F.lit(min_stopwords))
     )
+    return dict(
+        n_words=n.cast("long"), mean_word_len=mean_len, symbol_ratio=sym_ratio,
+        alpha_frac=alpha_frac, n_stop=n_stop.cast("long"), keep=keep,
+    )
+
+
+def gopher_rules(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    **thresholds,
+) -> DataFrame:
+    """Gopher document-level quality rules (Rae et al. 2021, Table A1):
+    word count within [min_words, max_words], mean word length within
+    [min_mean_word_len, max_mean_word_len], symbol-to-word ratio
+    (``#`` or ``...`` occurrences per word) below max_symbol_ratio,
+    at least min_alpha_frac of words containing an alphabetic
+    character, and at least min_stopwords DISTINCT stopwords present.
+    ``thresholds`` are ``gopher_columns``' keyword arguments.
+
+    Completes the quality trio: ``clean_lines`` (C4, line level) →
+    ``gopher_rules`` (document level) → ``repetition_stats`` (Gopher
+    repetition section).  Like those, one projection of array HOFs —
+    no shuffle, no Python, codegen'd end-to-end.
+
+    Ratios are rounded to 4 decimals so a float boundary cannot
+    straddle an oracle comparison.  Returns (id_col, n_words,
+    mean_word_len, symbol_ratio, alpha_frac, n_stop, keep); rows are
+    never dropped — callers filter on ``keep``.
+    """
+    cols = gopher_columns(F.col(text_col), **thresholds)
     return docs.select(
-        F.col(id_col),
-        n.cast("long").alias("n_words"),
-        mean_len.alias("mean_word_len"),
-        sym_ratio.alias("symbol_ratio"),
-        alpha_frac.alias("alpha_frac"),
-        n_stop.cast("long").alias("n_stop"),
-        keep.alias("keep"),
+        F.col(id_col), *[c.alias(name) for name, c in cols.items()]
     )
 
 
@@ -1213,7 +1223,8 @@ def lm_score(
             .distinct()
             .count()
         )
-        if vocab_size == 0:
+        # self-scoring an empty corpus yields no rows, not an error
+        if vocab_size == 0 and train_docs is not None:
             raise ValueError(
                 "training corpus has no tokens — cannot fit a bigram LM"
             )

@@ -139,9 +139,9 @@ def test_observe_funnel_matches_persist(spark, tmp_path):
     """--funnel observe (single fused write action, counts via
     df.observe) must produce byte-identical funnel.json numbers and
     the same corpus row set as the default per-stage persist ladder —
-    including through every fan-out stage kind: gopher (key-set
-    join), scrub-passages (dual-scan cache), exact-dedup (window),
-    lm filter (corpus-model join), shards (key fan-out)."""
+    including through every stage kind: cap and gopher (row filters),
+    scrub-passages (dual-scan cache), exact-dedup (window), lm filter
+    and dsir (corpus-model joins), shards (window over the rows)."""
     from ocr_project_spark.curate_job import main
 
     argv_common = [
@@ -272,7 +272,7 @@ FANOUT_ARGV = [
     "--dsir-n", "100",
     "--shards", "4",
 ]
-# a cheaper persist-mode ladder: four cuts (00/20/30/50) and a shard join
+# a cheaper persist-mode ladder: four cuts (00/20/30/50) and the shard stage
 SHORT_ARGV = [
     "--input", "/root/testdata/sf0.001/documents.parquet",
     "--gopher", "--gopher-set", "min_stopwords=1",
@@ -397,3 +397,122 @@ def test_lost_cut_fails_loudly_and_rerun_converges(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(curate_job, "cut_lineage", real_cut)
 
     assert run() == clean
+
+
+def _words(tag: str, n: int = 30) -> str:
+    """A text that passes the ladders' gopher thresholds (>= 25 words,
+    one stopword), made distinct by ``tag``."""
+    vocab = ["the", "river", "carries", "bright", "stones", "toward", "quiet"]
+    return " ".join(vocab[i % len(vocab)] for i in range(n)) + f" {tag}"
+
+
+def test_duplicate_ids_one_row_per_surviving_row(spark, tmp_path):
+    """The per-row stages (cap, gopher, shards) judge each row by its
+    own text: rows sharing a doc_id are neither multiplied nor kept for
+    a sibling's verdict, and a null id does not survive the ladder.
+    Two rows share id 1 and one of them is too short for gopher; two
+    rows share id 2 and both pass; one row has a null id."""
+    from ocr_project_spark.curate_job import main
+
+    short = "the short row"
+    rows = [
+        (1, _words("alpha"), "s1"),
+        (1, short, "s1"),
+        (2, _words("beta"), "s2"),
+        (2, _words("gamma"), "s2"),
+        (None, _words("delta"), "s3"),
+        (3, _words("epsilon"), "s4"),
+    ]
+    inp = str(tmp_path / "dup_ids.parquet")
+    spark.createDataFrame(
+        rows, "doc_id long, text string, source string"
+    ).coalesce(1).write.parquet(inp)
+    want = sorted((i, t) for i, t, _ in rows if i is not None and t != short)
+    argv = [
+        "--input", inp, "--run-id", "d",
+        "--gopher", "--gopher-set", "min_stopwords=1",
+        "--gopher-set", "min_words=25", "--shards", "2",
+    ]
+    for tag, extra in [
+        ("persist", ["--funnel", "persist"]),
+        ("observe", ["--funnel", "observe"]),
+        ("cap", ["--funnel", "observe", "--cap-per-source", "2"]),
+    ]:
+        out = str(tmp_path / tag)
+        assert main(argv + extra + ["--output", out]) == 0
+        funnel = json.load(open(os.path.join(out, "d", "funnel.json")))["funnel"]
+        docs = [f["n_docs"] for f in funnel]
+        assert all(a >= b for a, b in zip(docs, docs[1:])), (tag, funnel)
+        got = spark.read.parquet(os.path.join(out, "d", "corpus.parquet")).collect()
+        assert sorted((r.doc_id, r.text) for r in got) == want, tag
+        assert docs[-1] == len(want), (tag, funnel)
+        by_shard: dict[int, list[int]] = {}
+        for r in got:
+            by_shard.setdefault(r.shard, []).append(r.pos)
+        for shard, pos in by_shard.items():
+            assert sorted(pos) == list(range(len(pos))), (tag, shard, pos)
+
+    # a cap of one row per source keeps one of id 1's two rows, not both
+    out = str(tmp_path / "cap1")
+    assert main(
+        ["--input", inp, "--run-id", "d", "--output", out, "--cap-per-source", "1"]
+    ) == 0
+    funnel = json.load(open(os.path.join(out, "d", "funnel.json")))["funnel"]
+    assert [(f["stage"], f["n_docs"]) for f in funnel] == [
+        ("00_input", 6), ("05_source_cap", 3), ("90_written", 3),
+    ]
+
+
+def test_observe_cuts_only_corpus_model_stages(spark, tmp_path, monkeypatch):
+    """Observe mode cuts the lineage only ahead of the stages that build
+    a model or key set from their input (scrub-passages, lm, dsir):
+    gopher and shards apply to the rows in place and need no cut."""
+    from ocr_project_spark import curate_job
+
+    real_cut = curate_job.cut_lineage
+    n_cuts = [0]
+
+    def spy(df, resident):
+        n_cuts[0] += 1
+        return real_cut(df, resident)
+
+    monkeypatch.setattr(curate_job, "cut_lineage", spy)
+    bench_argv = [
+        "--input", "/root/testdata/sf0.001/documents.parquet",
+        "--gopher", "--gopher-set", "min_stopwords=1",
+        "--gopher-set", "min_words=25",
+        "--scrub-pii", "--scrub-passages", "8", "--scrub-broadcast",
+        "--exact-dedup", "--lm-cutoffs", "3.0,3.6", "--shards", "8",
+    ]
+    for tag, argv, want in [("bench", bench_argv, 2), ("fanout", FANOUT_ARGV, 3)]:
+        n_cuts[0] = 0
+        rc = curate_job.main(
+            argv + ["--run-id", "c", "--output", str(tmp_path / tag),
+                    "--funnel", "observe"]
+        )
+        assert rc == 0
+        assert n_cuts[0] == want, (tag, n_cuts[0])
+
+
+def test_lm_filter_on_emptied_corpus_writes_empty_corpus(spark, tmp_path):
+    """--lm-cutoffs self-scores the corpus that reaches it; when an
+    earlier stage emptied it there is nothing to score and the ladder
+    writes an empty corpus instead of failing to fit the LM."""
+    from ocr_project_spark.curate_job import main
+
+    inp = str(tmp_path / "no_terminal.parquet")
+    spark.createDataFrame(
+        [(i, f"a line without terminal punctuation {i}") for i in range(3)],
+        "doc_id long, text string",
+    ).write.parquet(inp)
+    out = str(tmp_path / "o")
+    rc = main(
+        ["--input", inp, "--output", out, "--run-id", "e",
+         "--clean-lines", "--lm-cutoffs", "3.0,3.6"]
+    )
+    assert rc == 0
+    funnel = json.load(open(os.path.join(out, "e", "funnel.json")))["funnel"]
+    assert [(f["stage"], f["n_docs"]) for f in funnel] == [
+        ("00_input", 3), ("10_clean_lines", 0),
+        ("60_lm_filter", 0), ("90_written", 0),
+    ]

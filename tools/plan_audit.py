@@ -57,10 +57,10 @@ AUDITED = [
 ]
 
 
-def fmt(df) -> str:
+def fmt(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+        df.explain(mode)
     return buf.getvalue()
 
 
@@ -153,23 +153,27 @@ def main() -> None:
 
     # early-termination split: both branches shuffle on the same
     # (doc_id, offset) key; evidence = every Exchange in the routed
-    # plan hashpartitions on those two columns only
+    # plan hashpartitions on those two columns only.  Audited on the plain
+    # candidates (the bucketed ones need no hash Exchange) and on the
+    # simple-mode plan, which keeps each node's arguments on its line.
     from ocr_project_spark.functions.fuse import fuse_media_candidates_routed
 
-    plan = fmt(fuse_media_candidates_routed(cands_b, 0.5))
+    plan = fmt(fuse_media_candidates_routed(spark.read.parquet(c), 0.5), "simple")
     ex_lines = [
-        ln.strip()[:140]
+        ln.split("+- ")[-1][:140]
         for ln in plan.splitlines()
         if "Exchange hashpartitioning" in ln
     ]
+    if not ex_lines:
+        raise SystemExit("routed fusion plan has no hash Exchange to audit")
     out.append("## early-termination split (fuse_media_candidates_routed) — exchanges")
     out.append("")
     out.extend("    " + ln for ln in ex_lines)
     same_key = all("doc_id" in ln and "offset" in ln for ln in ex_lines)
     out.append("")
     out.append(
-        f"All exchanges hash the fusion key (doc_id, offset): **{same_key}** — "
-        "the split adds route fan-out, not new shuffle keys/skew."
+        f"All {len(ex_lines)} exchanges hash the fusion key (doc_id, offset): "
+        f"**{same_key}** — the split adds route fan-out, not new shuffle keys/skew."
     )
     out.append("")
 
@@ -177,10 +181,7 @@ def main() -> None:
     # exactly ONE hash Exchange (the final per-query top-k on qid).
     # Count on the SIMPLE-mode plan: formatted mode splits the node
     # name from its hashpartitioning arguments.
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        harness.QUERIES["knn_join"].build(spark, sf).explain()
-    plan = buf.getvalue()
+    plan = fmt(harness.QUERIES["knn_join"].build(spark, sf), "simple")
     n_hash_ex = plan.count("Exchange hashpartitioning")
     has_bcast = "BroadcastExchange" in plan
     has_arrow = "MapInPandas" in plan or "ArrowEvalPython" in plan
