@@ -241,11 +241,12 @@ def main(argv: list[str] | None = None) -> int:
     _stage_wall: dict[str, float] = {}  # persist mode: per-stage action wall
     _t_start = _time.monotonic()
 
-    def _counts():
-        return (
-            F.count(F.lit(1)).alias("d"),
-            F.coalesce(F.sum(ntok(F.col("text"))), F.lit(0)).alias("t"),
-        )
+    # the funnel's two aggregates, built once: every record() and the
+    # read-back reuse them (each Column build is Py4J round trips)
+    funnel_aggs = (
+        F.count(F.lit(1)).alias("d"),
+        F.coalesce(F.sum(ntok(F.col("text"))), F.lit(0)).alias("t"),
+    )
 
     def record(df, stage):
         # attach a named metrics node: whichever action first streams
@@ -254,7 +255,7 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import Observation
 
         obs = Observation(f"funnel_{stage}")
-        df = df.observe(obs, *_counts())
+        df = df.observe(obs, *funnel_aggs)
         _observed.append((stage, obs))
         if args.funnel == "observe":
             return df
@@ -388,16 +389,28 @@ def main(argv: list[str] | None = None) -> int:
 
             # learn_bpe is an action (driver-side merge training): in
             # observe mode it reads the cut, so the fused upstream runs
-            # once here and the final write reads the cut too
-            cur = fanout_input(cur)
+            # once here and the final write reads the cut too.  The
+            # counts and packs join back on a row key taken on the cut
+            # (persist mode is cut at its last record()), not on
+            # doc_id: rows that share an id each keep their own count.
+            # Null-id rows take pack slots but, as at every id-keyed
+            # stage, do not survive
+            cur = fanout_input(cur).withColumn(
+                "_row", F.monotonically_increasing_id()
+            )
             merges = learn_bpe(cur, n_merges=args.bpe_merges)
-            counts = apply_bpe(cur, merges)
+            counts = apply_bpe(cur, merges, carry_cols=("_row",))
             packed = pack_sequences(
-                counts.select("doc_id", "n_bpe_tokens"),
+                counts,
                 budget=args.pack_budget,
                 tokens_col="n_bpe_tokens",
-            ).withColumnRenamed("n_tokens", "n_bpe_tokens")
-            cur = cur.join(packed, "doc_id")
+                carry_cols=("_row",),
+            ).select("_row", F.col("n_tokens").alias("n_bpe_tokens"), "pack_id")
+            cur = (
+                cur.join(packed, "_row")
+                .where(F.col("doc_id").isNotNull())
+                .drop("_row")
+            )
             extra_cols += ["n_bpe_tokens", "pack_id"]
 
         if args.shards is not None:
@@ -426,7 +439,7 @@ def main(argv: list[str] | None = None) -> int:
             funnel.append(
                 {"stage": stage, "n_docs": int(m["d"]), "n_tokens": int(m["t"])}
             )
-        row = spark.read.parquet(corpus_path).agg(*_counts()).collect()[0]
+        row = spark.read.parquet(corpus_path).agg(*funnel_aggs).collect()[0]
         funnel.append(
             {"stage": "90_written", "n_docs": int(row["d"]), "n_tokens": int(row["t"])}
         )

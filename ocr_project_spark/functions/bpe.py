@@ -130,20 +130,22 @@ def apply_bpe(
     id_col: str = "doc_id",
     text_col: str = "text",
     return_tokens: bool = False,
+    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Tokenize the corpus with a learned merge table, distributed.
 
-    Returns (id, n_words, n_bpe_tokens[, bpe_tokens]); ``n_bpe_tokens``
-    is the real packing/budgeting count (>= n_words: each word yields
-    at least one subword).  ``return_tokens`` adds the full subword
-    array — off by default, the count is what the packing tier needs
-    and the array triples the output width.
+    Returns (id, *carry_cols, n_words, n_bpe_tokens[, bpe_tokens]);
+    ``n_bpe_tokens`` is the real packing/budgeting count (>= n_words:
+    each word yields at least one subword).  ``return_tokens`` adds the
+    full subword array — off by default, the count is what the packing
+    tier needs and the array triples the output width.  ``carry_cols``
+    ride along unchanged, e.g. a per-row key where ids repeat.
 
     Shape at scale: the merge table is a closure-shipped dict of at
     most n_merges entries (kilobytes); the UDF is Arrow-batched
     (pandas_udf) so the only Python crossing is one columnar batch per
     partition — no shuffle at all; composes with
-    operators/pack.pack_sequences(token_count_col=...).
+    operators/pack.pack_sequences(tokens_col=...).
     """
     from pyspark.sql import types as T
 
@@ -173,6 +175,7 @@ def apply_bpe(
 
     base = docs.select(
         F.col(id_col),
+        *carry_cols,
         F.size(word_tokens(F.col(text_col))).cast("long").alias("n_words"),
         F.col(text_col).alias("_t"),
     )
@@ -180,10 +183,11 @@ def apply_bpe(
         enc = base.withColumn("bpe_tokens", _encode(F.col("_t")))
         return enc.select(
             id_col,
+            *carry_cols,
             "n_words",
             F.size("bpe_tokens").cast("long").alias("n_bpe_tokens"),
             "bpe_tokens",
         )
     return base.select(
-        id_col, "n_words", _count(F.col("_t")).alias("n_bpe_tokens")
+        id_col, *carry_cols, "n_words", _count(F.col("_t")).alias("n_bpe_tokens")
     )

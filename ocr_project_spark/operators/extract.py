@@ -15,9 +15,10 @@ the DataFrame and each stage is a columnar transformation:
   4. LEFT join docs->fused map on doc_id (docs never exploded; span
      arrays stay nested, so mega-doc skew stays inside one row and the
      join key is the single hash(doc_id))
-  5. per-doc assembly with higher-order functions: stable sort by
-     (offset, storage index), media resolution via map lookup,
-     boilerplate strip (functions/classify.py), dense re-rank ->
+  5. per-doc assembly with higher-order functions: one stable
+     comparator sort of the span structs by offset (ties keep storage
+     order), boilerplate strip (functions/classify.py), media
+     resolution via map lookup and dense re-rank ->
      (kind, text, media_ref, order)
 
 Every stage runs in the JVM with no Python; the only shuffles are the
@@ -25,6 +26,13 @@ two hash exchanges in 2-4.  Stage 5's higher-order functions are
 ``CodegenFallback``: their lambda bodies are interpreted per element,
 with no common-subexpression elimination, so a per-span value the
 lambda uses twice is bound once (functions/classify.is_content_expr).
+
+Plan construction: the Columns of stages 2, 3 and 5 and the status
+check do not depend on the input, so they are built once per JVM
+(``_plan_exprs``) and every later call only wires DataFrames together
+— ~60 Py4J round trips instead of ~1,500.  Retry candidates build
+their fused entries per call, and a custom keep rule
+(operators/extract_pandas.py) its assembly.
 
 Scale note: at 10^12 docs the fused side of the join is ~1 row per doc
 (pre-aggregated), so AQE can pick a shuffled hash join with skew
@@ -35,6 +43,7 @@ plans/partitioning.py.
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -43,25 +52,23 @@ from ocr_project_spark.functions.classify import is_content_expr
 from ocr_project_spark.functions.fuse import fuse_with_retry, fusion_order_key
 
 
-def _sort_permutation(spans: Column) -> Column:
-    """Stable (offset, storage index) permutation of the span array.
+def _offset_sorted(spans: Column) -> Column:
+    """The span array in offset order, ties in storage order.
 
     The storage array order is untrusted (FIXTURES.md: shuffled on
     write); the reference likewise re-sorts geometrically at
     paddleocr.py:291-294.  Duplicate offsets keep storage order (the
-    documented stable-sort choice), pinned by the idx field.
-
-    Memory note: sorting only (o, idx) pairs and gathering afterwards
-    moves ~3x fewer bytes than sorting full 5-field structs with
-    strings — this expression runs once per document across 10^12
-    docs, and on a saturated-socket benchmark the smaller working set
-    is worth ~15% wall time.
+    documented stable-sort choice): array_sort with a comparator runs
+    java.util.Arrays.sort(Object[], Comparator), a stable TimSort, so
+    one comparator sort of the span structs gives the (offset, storage
+    index) order without building and gathering index pairs.
     """
-    pairs = F.transform(
-        spans, lambda s, i: F.struct(s["offset"].alias("o"), i.alias("idx"))
+    return F.array_sort(
+        spans,
+        lambda a, b: F.when(a["offset"] < b["offset"], -1)
+        .when(a["offset"] > b["offset"], 1)
+        .otherwise(0),
     )
-    # array_sort on structs orders by fields left-to-right: (o, idx).
-    return F.array_sort(pairs)
 
 
 def _media_or_content(s: Column) -> Column:
@@ -77,18 +84,15 @@ def assemble_expr(
 ) -> Column:
     """spans + map<offset, struct<t,c>> -> output span array.
 
-    One gather pass resolves media text from the fused map and keeps
-    the spans ``keep`` accepts (boilerplate strip); a final transform
-    assigns the dense ``order``.  All passes are JVM-side HOFs — no
-    Python — whose lambdas are interpreted per element, not codegen'd.
+    One stable offset sort, a filter that keeps the spans ``keep``
+    accepts (boilerplate strip), and a final transform that resolves
+    media text from the fused map and assigns the dense ``order``.
+    All passes are JVM-side HOFs — no Python — whose lambdas are
+    interpreted per element, not codegen'd.
     ``keep`` is a span-struct predicate; a custom classifier
     (operators/extract_pandas.py) swaps its keep mask in through it.
     """
-    gathered = F.transform(
-        _sort_permutation(spans),
-        lambda p: F.element_at(spans, p["idx"] + 1),
-    )
-    kept = F.filter(gathered, keep)
+    kept = F.filter(_offset_sorted(spans), keep)
     return F.transform(
         kept,
         lambda s, i: F.struct(
@@ -155,6 +159,59 @@ def doc_status_expr() -> Column:
     )
 
 
+def _fused_entry() -> Column:
+    """A candidate row's fused-map value: struct<t: text, c: confidence>."""
+    return F.struct(F.col("text").alias("t"), F.col("confidence").alias("c"))
+
+
+class _PlanExprs(NamedTuple):
+    """extract()'s input-independent Columns (see ``_plan_exprs``)."""
+
+    status: Column  # doc_status_expr()
+    winner: Column  # per-(doc_id, offset) winning entry, aliased w
+    fused_map: Column  # per-doc map<offset, w> aggregate
+    assembled: Column  # assemble_expr(spans, fused_map)
+    spans: Column  # assembled when status.ok, else empty; aliased spans
+
+
+_PLAN_EXPRS: tuple[object, _PlanExprs] | None = None
+
+
+def _plan_exprs() -> _PlanExprs:
+    """The built-in plan's Columns, built on the first call in each JVM
+    and reused by every later extract(), extract_chunked() and
+    extract_pandas_engine() plan.
+
+    Building them is the fixed cost of every call: classic PySpark
+    wraps each Column method in ``with_origin_to_class``, so every
+    expression node costs several Py4J round trips (all but ~60 of a
+    call's ~1,500).  A Spark Column is an immutable, session-independent
+    expression tree that each DataFrame re-analyzes against its own
+    input, so reusing one gives the same plan.  The cache is keyed on
+    the identity of the Py4J gateway, the JVM the Column objects live
+    in; stopping and restarting a SparkContext keeps the gateway.
+    """
+    global _PLAN_EXPRS
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if _PLAN_EXPRS is None or _PLAN_EXPRS[0] is not gateway:
+        assembled = assemble_expr(F.col("spans"), F.col("fused_map"))
+        exprs = _PlanExprs(
+            status=doc_status_expr(),
+            winner=F.min_by(_fused_entry(), fusion_order_key()).alias("w"),
+            fused_map=F.map_from_entries(
+                F.collect_list(F.struct(F.col("offset"), F.col("w")))
+            ).alias("fused_map"),
+            assembled=assembled,
+            spans=F.when(F.col("status.ok"), assembled)
+            .otherwise(F.array().cast(SPAN_ARRAY_TYPE))
+            .alias("spans"),
+        )
+        _PLAN_EXPRS = (gateway, exprs)
+    return _PLAN_EXPRS[1]
+
+
 def _with_fused_map(
     docs: DataFrame,
     candidates: DataFrame | None,
@@ -175,25 +232,19 @@ def _with_fused_map(
         return docs.withColumn(
             "fused_map", F.lit(None).cast("map<int,struct<t:string,c:double>>")
         )
-    entry = F.struct(F.col("text").alias("t"), F.col("confidence").alias("c"))
+    exprs = _plan_exprs()
     if retry_candidates is not None:
         entries = fuse_with_retry(
             candidates, retry_candidates, threshold=retry_threshold
-        ).select("doc_id", "offset", entry.alias("w"))
+        ).select("doc_id", "offset", _fused_entry().alias("w"))
     else:
-        entries = candidates.groupBy("doc_id", "offset").agg(
-            F.min_by(entry, fusion_order_key()).alias("w")
-        )
+        entries = candidates.groupBy("doc_id", "offset").agg(exprs.winner)
     # The fused side is one row per media-bearing document — corpus
     # scale, never broadcastable at 10^12 docs, and a broadcast build
     # is a serial Amdahl term that caps scaling efficiency (measured:
     # 0.64 -> broadcast, see tools/scaling_bench.py).  Force the
     # co-partitioned shuffled hash join.
-    fused_map = entries.groupBy("doc_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("offset"), F.col("w")))
-        ).alias("fused_map")
-    )
+    fused_map = entries.groupBy("doc_id").agg(exprs.fused_map)
     return docs.join(fused_map.hint("shuffle_hash"), "doc_id", "left")
 
 
@@ -223,23 +274,14 @@ def extract(
     rather than a filter-split-union, which would scan the source twice;
     their join keys are null/rare so they add no shuffle skew of note.
     """
+    exprs = _plan_exprs()
     docs = _with_fused_map(
-        docs.withColumn("status", doc_status_expr()),
+        docs.withColumn("status", exprs.status),
         candidates,
         retry_candidates,
         retry_threshold,
     )
-    return docs.select(
-        "doc_id",
-        *(passthrough or []),
-        F.when(
-            F.col("status.ok"),
-            assemble_expr(F.col("spans"), F.col("fused_map")),
-        )
-        .otherwise(F.array().cast(SPAN_ARRAY_TYPE))
-        .alias("spans"),
-        "status",
-    )
+    return docs.select("doc_id", *(passthrough or []), exprs.spans, "status")
 
 
 def extract_chunked(
@@ -296,7 +338,8 @@ def extract_chunked(
         F.array().cast(SPAN_ARRAY_TYPE).alias("spans"),
         _status(False, errors.REASON_NULL_DOC_ID).alias("status"),
     )
-    tagged = with_id.withColumn("_st", doc_status_expr()).select(
+    exprs = _plan_exprs()
+    tagged = with_id.withColumn("_st", exprs.status).select(
         "doc_id",
         F.when(F.col("_st.ok"), F.col("spans"))
         .otherwise(F.array().cast(INPUT_SPAN_ARRAY_TYPE))
@@ -316,7 +359,7 @@ def extract_chunked(
     per_chunk = chunks.select(
         "doc_id",
         "chunk_id",
-        assemble_expr(F.col("spans"), F.col("fused_map")).alias("spans"),
+        exprs.assembled.alias("spans"),
         "status",
     )
     reassembled = reassemble_chunks(per_chunk, carry_cols=("status",))

@@ -36,9 +36,9 @@ from pyspark.sql import functions as F
 
 from ocr_project_spark.operators.extract import (
     SPAN_ARRAY_TYPE,
+    _plan_exprs,
     _with_fused_map,
     assemble_expr,
-    doc_status_expr,
     extract,
     resolved_text,
 )
@@ -128,7 +128,7 @@ def extract_pandas_engine(
         return extract(docs, candidates)
 
     prepped = _with_fused_map(
-        docs.withColumn("status", doc_status_expr()), candidates
+        docs.withColumn("status", _plan_exprs().status), candidates
     )
     fm = F.col("fused_map")
     # The ONLY column that crosses into Python: each doc's

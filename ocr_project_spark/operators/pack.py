@@ -56,18 +56,21 @@ def pack_sequences(
     id_col: str = "doc_id",
     text_col: str = "text",
     tokens_col: str | None = None,
+    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(doc_id, n_tokens, pack_id) — greedy first-fit packing of
-    documents into packs whose token sum stays <= ``budget`` (except
-    single documents that alone exceed it, which pack alone rather
-    than being dropped — truncation is the trainer's decision).
+    """(doc_id, n_tokens, *carry_cols, pack_id) — greedy first-fit
+    packing of documents into packs whose token sum stays <= ``budget``
+    (except single documents that alone exceed it, which pack alone
+    rather than being dropped — truncation is the trainer's decision).
 
     Token counts come from ``tokens_col`` when given (a precomputed
     count column), else ``size(word_tokens(text_col))`` computed
     JVM-side in the projection that feeds the kernel — the python
     kernel only ever sees (id, n_tokens) ints, never text.
     pack_id is ``'<partition>-<seq>'``: globally unique, stable given
-    the input partitioning.
+    the input partitioning.  ``carry_cols`` pass through the kernel
+    unchanged — a per-row key lets a caller whose ids repeat join the
+    packing back onto its rows one to one.
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
@@ -81,6 +84,7 @@ def pack_sequences(
             F.col(id_col).alias("doc_id"),
             # null counts (null precomputed column) pack as 0 tokens
             F.coalesce(n_tokens.cast("long"), F.lit(0)).alias("n_tokens"),
+            *carry_cols,
             F.spark_partition_id().alias("_p"),
         )
         # narrow: order documents by id within each partition so the
@@ -113,7 +117,7 @@ def pack_sequences(
             else:
                 labels = _pack_bounds(counts, budget)
             part = int(pdf["_p"].iloc[0])
-            out = pdf[["doc_id", "n_tokens"]].copy()
+            out = pdf[["doc_id", "n_tokens", *carry_cols]].copy()
             out["pack_id"] = [f"{part}-{pack_off + p}" for p in labels]
             last = int(labels[-1])
             in_last = counts[labels == last]
@@ -124,7 +128,7 @@ def pack_sequences(
 
     from pyspark.sql.types import StringType, StructField, StructType
 
-    base = slim.select("doc_id", "n_tokens").schema
+    base = slim.select("doc_id", "n_tokens", *carry_cols).schema
     # fresh StructType: .add() mutates its receiver in place
     out_schema = StructType(
         list(base.fields) + [StructField("pack_id", StringType(), True)]

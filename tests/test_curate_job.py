@@ -406,12 +406,23 @@ def _words(tag: str, n: int = 30) -> str:
     return " ".join(vocab[i % len(vocab)] for i in range(n)) + f" {tag}"
 
 
+def _own_bpe_counts(spark, rows, n_merges):
+    """{(doc_id, text): n_bpe_tokens} with merges learned from ``rows``
+    and each row counted by its own text."""
+    from ocr_project_spark.functions.bpe import apply_bpe, learn_bpe
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    counted = apply_bpe(df, learn_bpe(df, n_merges=n_merges), carry_cols=("text",))
+    return {(r.doc_id, r.text): r.n_bpe_tokens for r in counted.collect()}
+
+
 def test_duplicate_ids_one_row_per_surviving_row(spark, tmp_path):
-    """The per-row stages (cap, gopher, shards) judge each row by its
-    own text: rows sharing a doc_id are neither multiplied nor kept for
-    a sibling's verdict, and a null id does not survive the ladder.
-    Two rows share id 1 and one of them is too short for gopher; two
-    rows share id 2 and both pass; one row has a null id."""
+    """The per-row stages (cap, gopher, BPE packing, shards) judge each
+    row by its own text: rows sharing a doc_id are neither multiplied
+    nor kept for a sibling's verdict, each keeps its own BPE count, and
+    a null id does not survive the ladder.  Two rows share id 1 and one
+    of them is too short for gopher; two rows share id 2 and both pass;
+    one row has a null id."""
     from ocr_project_spark.curate_job import main
 
     short = "the short row"
@@ -428,6 +439,8 @@ def test_duplicate_ids_one_row_per_surviving_row(spark, tmp_path):
         rows, "doc_id long, text string, source string"
     ).coalesce(1).write.parquet(inp)
     want = sorted((i, t) for i, t, _ in rows if i is not None and t != short)
+    bpe = ["--bpe-merges", "5", "--pack-budget", "1024"]
+    gopher_counts = _own_bpe_counts(spark, want, 5)
     argv = [
         "--input", inp, "--run-id", "d",
         "--gopher", "--gopher-set", "min_stopwords=1",
@@ -437,6 +450,7 @@ def test_duplicate_ids_one_row_per_surviving_row(spark, tmp_path):
         ("persist", ["--funnel", "persist"]),
         ("observe", ["--funnel", "observe"]),
         ("cap", ["--funnel", "observe", "--cap-per-source", "2"]),
+        ("bpe", ["--funnel", "observe", *bpe]),
     ]:
         out = str(tmp_path / tag)
         assert main(argv + extra + ["--output", out]) == 0
@@ -451,6 +465,25 @@ def test_duplicate_ids_one_row_per_surviving_row(spark, tmp_path):
             by_shard.setdefault(r.shard, []).append(r.pos)
         for shard, pos in by_shard.items():
             assert sorted(pos) == list(range(len(pos))), (tag, shard, pos)
+        if tag == "bpe":
+            got_counts = {(r.doc_id, r.text): r.n_bpe_tokens for r in got}
+            assert got_counts == gopher_counts
+
+    # BPE packing alone, persist mode: id 1's long and short rows each
+    # keep their own count; the null-id row takes a pack slot only
+    out = str(tmp_path / "bpe_alone")
+    assert main(
+        ["--input", inp, "--run-id", "d", "--output", out,
+         "--funnel", "persist", *bpe]
+    ) == 0
+    got = spark.read.parquet(os.path.join(out, "d", "corpus.parquet")).collect()
+    with_id = [(i, t) for i, t, _ in rows if i is not None]
+    assert sorted((r.doc_id, r.text) for r in got) == sorted(with_id)
+    want_counts = _own_bpe_counts(spark, [(i, t) for i, t, _ in rows], 5)
+    assert {(r.doc_id, r.text): r.n_bpe_tokens for r in got} == {
+        k: v for k, v in want_counts.items() if k[0] is not None
+    }
+    assert all(r.pack_id for r in got)
 
     # a cap of one row per source keeps one of id 1's two rows, not both
     out = str(tmp_path / "cap1")

@@ -69,3 +69,28 @@ def test_extract_without_candidates(spark, corpus_dfs):
     )
     assert row is not None
     assert all(s["text"] is not None for s in row["m"])
+
+
+def test_repeated_extract_reuses_plan_columns(monkeypatch, corpus_dfs):
+    """extract()'s input-independent Columns are built once per JVM: a
+    second call in the same session issues a fraction of the first
+    plan's Py4J commands (building them costs ~1,500) and returns the
+    same rows."""
+    from py4j.clientserver import JavaClient
+
+    docs_df, cands_df = corpus_dfs
+    first = extract(docs_df, cands_df)
+
+    sent = [0]
+    send = JavaClient.send_command
+
+    def counting(self, *args, **kwargs):
+        sent[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(JavaClient, "send_command", counting)
+    second = extract(docs_df, cands_df)
+    monkeypatch.undo()
+
+    assert sent[0] <= 250, sent[0]
+    assert sorted(first.collect()) == sorted(second.collect())
