@@ -90,17 +90,15 @@ def main() -> None:
 
     corpus_dir = bench_corpus_path()
 
-    # Per-core-scaled heap + parallel GC + fine input splits: the same
-    # runtime policy the scaling benchmark validated (BASELINE.md).
+    # Per-core-scaled heap + fine input splits, as the scaling benchmark
+    # validated (BASELINE.md); the collector comes from get_spark, the
+    # home of the engine's JVM runtime policy.
     os.environ.setdefault("SPARK_DRIVER_MEM", f"{max(8, int(1.5 * cpus))}g")
     spark = get_spark(
         app_name="bench",
         master=f"local[{cpus}]",
         shuffle_partitions=2 * cpus,
-        extra_conf={
-            "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
-            "spark.sql.files.maxPartitionBytes": "8m",
-        },
+        extra_conf={"spark.sql.files.maxPartitionBytes": "8m"},
     )
 
     timings: dict[str, float] = {}

@@ -27,7 +27,9 @@ this CLI only composes public operators.
 
 Usage (all stages optional; omitted stages pass through):
 
-    spark-submit --py-files dist/pkg.zip ocr_project_spark/curate_job.py \
+    spark-submit --py-files dist/pkg.zip \
+        --conf spark.driver.defaultJavaOptions=-XX:+UseParallelGC \
+        ocr_project_spark/curate_job.py \
         --input docs.parquet --output /out --run-id r1 \
         --funnel observe --scrub-broadcast \
         --clean-lines --gopher --gopher-set min_stopwords=1 \
@@ -35,6 +37,10 @@ Usage (all stages optional; omitted stages pass through):
         --lm-cutoffs 3.4,3.5 --lm-keep head,middle \
         --dsir-target seed.parquet --dsir-n 100000 \
         --bpe-merges 200 --pack-budget 2048 --shards 64
+
+The ``--conf`` puts the driver JVM, which runs the tasks of a
+``local[N]`` submit, on the engine's collector: it starts before
+``get_spark`` (session.py) can choose one.
 
 Outputs: <output>/<run_id>/corpus.parquet, <output>/<run_id>/funnel.json
 """

@@ -5,11 +5,17 @@ cluster".  Packaging:
 
     python tools/make_pyfiles.py                  # -> dist/ocr_project_spark.zip
     spark-submit --py-files dist/ocr_project_spark.zip \
+        --conf spark.driver.defaultJavaOptions=-XX:+UseParallelGC \
         ocr_project_spark/job.py \
         --input  /data/documents_spans \
         --candidates /data/media_candidates \
         --output /data/out --run-id run1 \
         --buckets 256 --parallelism 512
+
+The driver JVM of a spark-submit is running before ``get_spark`` is
+called, so the engine's collector (session.py) reaches it only through
+the ``--conf`` above; that is the JVM that runs the tasks of a
+``local[N]`` submit.  Executors of a cluster get it from ``get_spark``.
 
 The module is import-safe (no side effects); ``main`` builds the
 session, runs the checkpointed extraction, prints a one-line JSON

@@ -334,6 +334,30 @@ def test_ladder_plans_stay_bounded(spark, tmp_path):
         assert 0 < n_jobs <= max_jobs[mode], (mode, n_jobs)
 
 
+def test_repeated_ladder_reuses_generated_classes(spark, tmp_path):
+    """The session's codegen cache holds the deepest ladder: at Spark's
+    default of 100 entries the fan-out ladder's ~157 classes evict each
+    other, and an identical second pass in the same driver recompiled
+    ~147 of them.  A second pass may still compile a few: AQE numbers
+    the codegen stages of concurrently materialized query stages in
+    either order, and the stage id is part of the class body (4-5
+    classes in 2 of 6 passes measured)."""
+    from ocr_project_spark.curate_job import main
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    added = []
+    for rep in range(2):
+        before = compiles.METRIC_COMPILATION_TIME().getCount()
+        rc = main(
+            FANOUT_ARGV
+            + ["--run-id", "g", "--output", str(tmp_path / str(rep)),
+               "--funnel", "observe"]
+        )
+        assert rc == 0
+        added.append(compiles.METRIC_COMPILATION_TIME().getCount() - before)
+    assert added[1] <= 8, added
+
+
 def test_cuts_released_at_most_two_resident(spark, tmp_path, monkeypatch):
     """DataFrame.unpersist() is a no-op on a checkpointed frame, so the
     ladder releases each cut through its RDD: at most two cuts are ever

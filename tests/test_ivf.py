@@ -23,28 +23,34 @@ def test_ivf_deterministic(spark, emb):
 
 
 def test_ivf_recall_vs_brute_force(spark, emb):
-    assigned, centroids = ivf_build(emb, n_centroids=8, seed=42)
+    """recall@10 against the exact tier over 10 queries, at the
+    defaults of ivf_build/ivf_topk (8 centroids, n_probe=2; measured
+    0.55, where probing a random quarter of the clusters gives ~0.25)
+    and with half the clusters probed (n_probe=4; measured 0.81)."""
+    assigned, centroids = ivf_build(emb)
     n_queries, k = 10, 10
     queries = {
         r["vec_id"]: [float(x) for x in r["embedding"]]
         for r in emb.where(emb.vec_id < n_queries).collect()
     }
-    recalls = []
+    probes = {"default": {}, "half": {"n_probe": 4}}
+    recalls = {name: [] for name in probes}
     for qid, qv in queries.items():
         rest = emb.where(emb.vec_id != qid)
         exact = {r["vec_id"] for r in cosine_topk(rest, qv, k=k).collect()}
-        approx = {
-            r["vec_id"]
-            for r in ivf_topk(
-                assigned.where(assigned.vec_id != qid), centroids, qv,
-                k=k, n_probe=4,
-            ).collect()
-        }
-        recalls.append(len(exact & approx) / k)
-    mean_recall = sum(recalls) / len(recalls)
-    # half the clusters probed -> well above random; brute-force remains
-    # the exact tier, IVF is the pruned scale path
-    assert mean_recall >= 0.5, recalls
+        for name, kw in probes.items():
+            approx = {
+                r["vec_id"]
+                for r in ivf_topk(
+                    assigned.where(assigned.vec_id != qid), centroids, qv,
+                    k=k, **kw,
+                ).collect()
+            }
+            recalls[name].append(len(exact & approx) / k)
+    mean = {name: sum(r) / len(r) for name, r in recalls.items()}
+    # brute-force remains the exact tier, IVF is the pruned scale path
+    assert mean["default"] >= 0.45, recalls
+    assert mean["half"] >= 0.7, recalls
 
 
 def test_ivf_probe_prunes(spark, emb):

@@ -36,7 +36,6 @@ spark = get_spark(app_name=f"cluster-scale-{cores}", master="spark://127.0.0.1:7
                       "spark.cores.max": str(cores),
                       "spark.executor.cores": "2",
                       "spark.executor.memory": "3g",
-                      "spark.executor.extraJavaOptions": "-XX:+UseParallelGC",
                       "spark.sql.files.maxPartitionBytes": "4m",
                   })
 docs, cands = read_bucketed(spark, "/tmp/ocr_scaling_bench_r384/bucketed", n_buckets=64)

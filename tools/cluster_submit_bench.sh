@@ -50,7 +50,6 @@ for CORES in 2 8; do
     --conf spark.cores.max=$CORES \
     --conf spark.executor.cores=2 \
     --conf spark.executor.memory=3g \
-    --conf "spark.executor.extraJavaOptions=-XX:+UseParallelGC" \
     --conf spark.sql.files.maxPartitionBytes=4m \
     --conf spark.sql.shuffle.partitions=$((2 * CORES)) \
     "$ROOT/ocr_project_spark/job.py" \

@@ -93,17 +93,15 @@ def child_run(cores: int, docs_path: str, cands_path: str) -> dict:
     from ocr_project_spark.sources.bucketed import read_bucketed
 
     # Per-core-constant resources, the way a real cluster scales from N
-    # to 4N executors: heap = 1.5 GB/core, parallel GC, and input splits
-    # small enough that every parallelism level runs several task waves
-    # (wave quantization at 1-2 waves otherwise taxes the wide run).
+    # to 4N executors: heap = 1.5 GB/core and input splits small enough
+    # that every parallelism level runs several task waves (wave
+    # quantization at 1-2 waves otherwise taxes the wide run).
+    # get_spark puts the JVM on the engine's collector.
     os.environ["SPARK_DRIVER_MEM"] = f"{max(4, int(1.5 * cores))}g"
     spark = get_spark(
         app_name=f"scale-{cores}", master=f"local[{cores}]",
         shuffle_partitions=2 * cores,
-        extra_conf={
-            "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
-            "spark.sql.files.maxPartitionBytes": "4m",
-        },
+        extra_conf={"spark.sql.files.maxPartitionBytes": "4m"},
     )
     work_dir = os.path.dirname(docs_path)
     docs, cands = read_bucketed(spark, f"{work_dir}/bucketed", n_buckets=64)

@@ -50,10 +50,7 @@ def main() -> None:
         app_name="status_cost_bench",
         master=f"local[{cpus}]",
         shuffle_partitions=2 * cpus,
-        extra_conf={
-            "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
-            "spark.sql.files.maxPartitionBytes": "8m",
-        },
+        extra_conf={"spark.sql.files.maxPartitionBytes": "8m"},
     )
     bkt_root = f"{corpus_dir}/bucketed"
     if not os.path.exists(f"{bkt_root}/_DONE"):
